@@ -31,13 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val fpStart = machineFingerprint()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Warmup: one aggregate + one window query absorb the one-time session /
     // JIT / codegen cost (~5-6 s) that would otherwise be attributed to
     // whichever timed query happens to run first, making per-query numbers

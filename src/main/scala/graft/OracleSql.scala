@@ -141,7 +141,7 @@ object OracleSql {
   /** Band `j`'s 0..255 key for the WIDE geometry — sign bits of that
     * band's 8 planes, weighted 1..128, exactly the engine's `wb$j` column
     * (keys are unpacked per band, so no 64-bit shift semantics to align —
-    * see [[graft.ops.Similarity.cosineDupLshWide]]). */
+    * see [[graft.ops.Similarity.cosineDupLsh]]). */
   private def wideBandKeyTerm(j: Int): String = {
     import graft.ops.Similarity.{widePlanes, WideBitsPerBand}
     (0 until WideBitsPerBand).map { b =>

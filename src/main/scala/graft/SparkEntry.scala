@@ -45,11 +45,7 @@ object SparkEntry {
       : (SparkSession, String) => DataFrame =
     (s, d) => {
       s.sqlContext.clearCache()
-      // SPARK_GRAFT_KEEP_STRAYS=1 disables the release — the diagnostic
-      // control arm of the round-15 session-hygiene A/B (BENCH.md):
-      // same HEAD, same session shape, blocks left pinned
-      if (!sys.env.get("SPARK_GRAFT_KEEP_STRAYS").contains("1"))
-        graft.ops.Caching.releaseStrays(s)
+      graft.ops.Caching.releaseStrays(s)
       fn(s, d)
     }
 
@@ -256,9 +252,9 @@ object SparkEntry {
     // `emb_dup_lsh_wide_mp` NAME is retired because it would be this very
     // binding run twice (3.4 s/bench, 336 s/×30 sweep of pure
     // duplication) — emb_dup_recall still reports all three geometries.
-    "emb_dup_lsh" -> ((s: SparkSession, d: String) => Similarity.cosineDupLshWideMultiProbe(s, d)),
-    "emb_dup_lsh_legacy" -> ((s: SparkSession, d: String) => Similarity.cosineDupLsh(s, d)),
-    "emb_dup_lsh_wide" -> ((s: SparkSession, d: String) => Similarity.cosineDupLshWide(s, d)),
+    "emb_dup_lsh" -> ((s: SparkSession, d: String) => Similarity.cosineDupLsh(s, d, Similarity.BandGeometry.WideMultiProbe)),
+    "emb_dup_lsh_legacy" -> ((s: SparkSession, d: String) => Similarity.cosineDupLsh(s, d, Similarity.BandGeometry.Legacy)),
+    "emb_dup_lsh_wide" -> ((s: SparkSession, d: String) => Similarity.cosineDupLsh(s, d, Similarity.BandGeometry.Wide)),
     "emb_dup_intake" -> ((s: SparkSession, d: String) => Similarity.cosineDupIntake(s, d)),
     "emb_dup_intake_indexed" -> ((s: SparkSession, d: String) => Similarity.cosineDupIntakeIndexed(s, d)),
     "emb_semdedup" -> ((s: SparkSession, d: String) => Similarity.semDedup(s, d)),

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,14 +12,7 @@ object Verify {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // Opt-in warmup (SPARK_GRAFT_WARMUP=1): build the standing artifacts
     // (indexes, BPE merges, curation verdicts) BEFORE the timed loop, so
@@ -51,21 +45,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** The query name → DuckDB SQL map as one JSON object. Jackson escapes
+    * every control char, so a tab or CR in builder-authored SQL cannot
+    * make the oracle gate's json.load fail. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    new ObjectMapper().writeValueAsString(sql.asJava)
 }

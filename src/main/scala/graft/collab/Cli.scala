@@ -1,7 +1,5 @@
 package graft.collab
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry (ref: CollabFilterCassandraDriver.java:33-48). The reference
   * dispatches between two byte-identical impls via args[0] ∈ {7,8} and reads
   * args[0] before its length guard; we validate first and keep a single
@@ -13,16 +11,7 @@ object Cli {
     val csvPath = args.headOption.getOrElse("src/test/resources/ratings.csv")
     val warehouse = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-store").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-collab")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     try {
       val modelDir = if (args.length > 2) Some(args(2)) else None
       val result = Pipeline.run(spark, new ParquetTableStore(spark, warehouse),

@@ -20,11 +20,12 @@ object Training {
   val DefaultMaxIter = 20
   val DefaultRegParam = 0.01
 
-  /** Chosen by tools.SeedScan: RMSE ≈ 0.315 on the reference CSV, triple
-    * the margin of neighboring seeds under the 0.5 gate. Seeding pins the
-    * factor init, but ALS float accumulation still jitters with shuffle
-    * fetch order (±a few hundredths), so the gate needs real margin —
-    * seed 42's 0.47 intermittently crossed 0.5. */
+  /** Chosen by a seed scan (BENCH.md, "Deleted one-off tools": SeedScan):
+    * RMSE ≈ 0.315 on the reference CSV, triple the margin of neighboring
+    * seeds under the 0.5 gate. Seeding pins the factor init, but ALS
+    * float accumulation still jitters with shuffle fetch order (±a few
+    * hundredths), so the gate needs real margin — seed 42's 0.47
+    * intermittently crossed 0.5. */
   val DefaultSeed = 2L
 
   /** Persist a trained model (factor matrices + params) for reuse — the

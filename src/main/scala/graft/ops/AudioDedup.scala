@@ -50,16 +50,17 @@ object AudioDedup {
 
   /** Exact-verify threshold: integer L1 over the 16 permille window
     * statistics. Calibrated like [[Multimodal.MmDupL1Eps]], by
-    * measurement (AudioEpsCalib at sf0.01, domain 300): exact
-    * duplicate-prefix assets sit at 0; the random-pair 1st percentile is
+    * measurement (BENCH.md, "Deleted one-off tools": AudioEpsCalib at
+    * sf0.01, domain 300): exact duplicate-prefix assets sit at 0; the
+    * random-pair 1st percentile is
     * ≈ 6,100 and the NN median ≈ 6,200 — 2,000 admits a few-edit prefix
     * (26 true pairs in the calibration domain) while rejecting the
     * unrelated-pair floor. */
   val AudioL1Eps = 2000L
 
   /** Level quanta for the probe KEY, chosen by the same measured sweep
-    * (AudioEpsCalib): the exact-or-±1-one-bin window must cover pairs
-    * inside [[AudioL1Eps]] (quantum ≈ eps per energy bin ⇒ a one-bin
+    * (BENCH.md, AudioEpsCalib): the exact-or-±1-one-bin window must cover
+    * pairs inside [[AudioL1Eps]] (quantum ≈ eps per energy bin ⇒ a one-bin
     * eps-sized difference moves that bin by ≤ 1 level) without
     * collision-flooring the exact-key buckets. Measured at sf0.01:
     * (4000, 125) → window-recall 20/26 with maxBucket 4 / Σc(c−1)/2 = 54

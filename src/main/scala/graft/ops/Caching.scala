@@ -28,13 +28,6 @@ object Caching {
     * (a streaming micro-batch's pinned frame, a user's own localCheckpoint)
     * instead of merely un-caching it (r15 ADVICE). */
   def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
-    // Plan-review mode (r16, tooling only): the eager checkpoint replaces
-    // the returned frame's plan with a Scan ExistingRDD stub, so
-    // `explain` on a materialized query shows nothing. Under
-    // SPARK_GRAFT_LAZY_PLANS=1 (set only by ExplainAll runs — never by
-    // Bench/Verify) the LAZY frame returns instead, with upstream caches
-    // kept (no action runs in an explain session, so nothing recomputes).
-    if (sys.env.get("SPARK_GRAFT_LAZY_PLANS").contains("1")) return out
     val s = out.sparkSession
     val before = s.sparkContext.getPersistentRDDs.keySet
     val r = out.localCheckpoint()
@@ -93,11 +86,10 @@ object Caching {
     * hygiene at measured ≈zero cost — NOT a performance fix: the round-15
     * controlled A/B (BENCH.md round 15) acquitted pinned stray blocks as
     * the r14 pair-family regression's mechanism (the keep-strays control
-    * arm behind `SPARK_GRAFT_KEEP_STRAYS=1` actually ran FASTER than the
-    * release arms, within weather; the regression was sustained machine
-    * load). Kept wired into [[graft.SparkEntry]]'s `fresh` because
-    * unbounded pinned-block growth is still a leak, and the env knob
-    * keeps the decision re-measurable.
+    * arm actually ran FASTER than the release arms, within weather; the
+    * regression was sustained machine load). Kept wired into
+    * [[graft.SparkEntry]]'s `fresh` because unbounded pinned-block growth
+    * is still a leak.
     *
     * SINGLE-CONSUMER CONTRACT (r15 ADVICE): constructing a registry query
     * invalidates every EARLIER registry query's materialized result —
@@ -131,15 +123,6 @@ object Caching {
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
-  /** The session's auto-broadcast threshold in bytes (0 when disabled). */
-  private def broadcastThreshold(
-      s: org.apache.spark.sql.SparkSession): Long = {
-    val v = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    if (v.trim.startsWith("-")) 0L
-    else try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-    catch { case scala.util.control.NonFatal(_) => 10L * 1024 * 1024 }
-  }
-
   /** Eagerly pin `f` and, when its ACTUAL stored size clears the session's
     * auto-broadcast threshold, return it broadcast-hinted.
     *
@@ -165,7 +148,8 @@ object Caching {
     newIds.foreach(id => ids.add(id))
     val bytes = s.sparkContext.getRDDStorageInfo
       .filter(i => newIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-    val thr = broadcastThreshold(s)
+    // the session's already-parsed threshold; negative disables broadcast
+    val thr = s.sessionState.conf.autoBroadcastJoinThreshold
     if (bytes > 0 && thr > 0 && bytes <= thr)
       org.apache.spark.sql.functions.broadcast(cp)
     else cp

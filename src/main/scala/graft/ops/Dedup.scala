@@ -313,12 +313,6 @@ object Dedup {
     * This is what turns pair output into an actual dedup decision: one
     * keeper (the cluster id = min doc_id) per transitive duplicate group.
     */
-  /** Rounds the last distributed (label-propagation) run took to converge;
-    * -1 until a distributed run happens. Diagnostic only — read by
-    * CcScaleDemo to report round counts against the pointer-doubling
-    * O(log diameter) bound. */
-  @volatile private[graft] var lastDistributedRounds: Int = -1
-
   def connectedComponents(pairs: DataFrame,
       driverThreshold: Long = 1000000L): DataFrame = {
     val spark = pairs.sparkSession
@@ -406,7 +400,6 @@ object Dedup {
       require(changed == 0,
         s"connectedComponents: min-label propagation did not converge after " +
           s"$iter rounds ($changed labels still changing)")
-      lastDistributedRounds = iter
       labels.select(col("node").as("doc_id"), col("label").as("cluster"))
     }
     edges.unpersist()

@@ -475,7 +475,7 @@ object Multimodal {
     *
     *   - `exact_pair_bound` = Σ c·(c−1)/2 over exact phash-key groups —
     *     replica duplication SQUARES these groups, which is precisely
-    *     the ×30 blowup mechanism (MmPairCapDemo);
+    *     the ×30 blowup mechanism (BENCH.md, Round 15 close);
     *   - `probe_candidate_bound` = Σ over each asset's ±1-one-bin probe
     *     variants of the matched key's group size (ordered candidates —
     *     an upper bound on 2× the unordered probe pairs);

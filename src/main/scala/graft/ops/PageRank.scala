@@ -62,8 +62,8 @@ object PageRank {
     * trajectory is bit-identical (PageRankSpec's driver-side replay
     * checks rank-for-rank). Previous shape was 3 exchanges + 2 joins per
     * round (rank⋈edges, contribution agg, nodes⋈contribs); at sf0.1 the
-    * 63-job schedule cost dominated (JobProfile: ~40-80 ms/job driver
-    * round-trip). */
+    * 63-job schedule cost dominated (~40-80 ms/job driver round-trip,
+    * OPTIMIZATION_r17.md §1). */
   def pageRank(pairs: DataFrame, iters: Int = Iters,
       maxDegree: Option[Int] = None): DataFrame = {
     val dir1 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))

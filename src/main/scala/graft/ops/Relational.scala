@@ -291,17 +291,11 @@ object Relational {
 
   /** CASE WHEN + round (≙ F2 error flag + C1 rounding): discount banding. */
   def caseRound(s: SparkSession, dir: String): DataFrame =
-    caseRoundUnsorted(s, dir).orderBy($"l_orderkey", $"l_linenumber")
-
-  /** [[caseRound]] without the presentation sort — the per-row CASE/round
-    * projection alone (tools.CaseRoundProfile decomposes the sweep cost of
-    * the sorted form into scan / project / write / sort components; the
-    * registered query keeps the sorted contract its oracle replays). */
-  private[graft] def caseRoundUnsorted(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_linenumber",
         round($"l_discount" * 100, 1).as("disc_pct"),
         when($"l_discount" >= 0.05, "HIGH").otherwise("LOW").as("disc_band"))
+      .orderBy($"l_orderkey", $"l_linenumber")
 
   /** String functions (≙ C2/C3/C7): substring, upper, length, concat_ws. */
   def stringFuncs(s: SparkSession, dir: String): DataFrame =

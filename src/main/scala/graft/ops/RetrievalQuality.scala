@@ -179,11 +179,14 @@ object RetrievalQuality {
     // operator's output would recompute the whole corpus's
     // output-quadratic pair set for a constant-size slice
     val legacy = Caching.memo(s, s"embDupRecall.v.legacy:$dir")(
-      Similarity.cosineDupLsh(s, dir, maxId = Some(300L)))
+      Similarity.cosineDupLsh(s, dir, Similarity.BandGeometry.Legacy,
+        maxId = Some(300L)))
     val wide = Caching.memo(s, s"embDupRecall.v.wide:$dir")(
-      Similarity.cosineDupLshWide(s, dir, maxId = Some(300L)))
+      Similarity.cosineDupLsh(s, dir, Similarity.BandGeometry.Wide,
+        maxId = Some(300L)))
     val wideMp = Caching.memo(s, s"embDupRecall.v.wide_mp:$dir")(
-      Similarity.cosineDupLshWideMultiProbe(s, dir, maxId = Some(300L)))
+      Similarity.cosineDupLsh(s, dir,
+        Similarity.BandGeometry.WideMultiProbe, maxId = Some(300L)))
     qualityReport(exact,
       Seq("hyperplane_band_legacy" -> legacy, "hyperplane_band_wide" -> wide,
         "hyperplane_band_wide_mp" -> wideMp),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,8 @@ object Similarity {
     * [[graft.ops.RetrievalQuality.embDupRecall]] — which is the classic
     * LSH band/width tradeoff, tuned HERE for the dedup use (high-sim
     * pairs) where the default tunes for breadth. The operator over this
-    * geometry is [[cosineDupLshWide]] (query `emb_dup_lsh_wide`).
+    * geometry is [[cosineDupLsh]] under [[BandGeometry.Wide]] (query
+    * `emb_dup_lsh_wide`).
     * Same seed and draw order as [[planes]], so the first 16 wide planes
     * ARE the default planes (one fewer constant family to audit). */
   val WideNumBands = 8
@@ -81,6 +82,30 @@ object Similarity {
   val widePlanes: IndexedSeq[Array[Double]] = {
     val rnd = new java.util.Random(7L)
     IndexedSeq.fill(WideNumPlanes)(Array.fill(Dim)(rnd.nextGaussian()))
+  }
+
+  /** One hyperplane-LSH band gate: `bands` keys of `bitsPerBand` sign bits
+    * each, band j over planes j·bitsPerBand until (j+1)·bitsPerBand of
+    * [[widePlanes]] (whose first 16 ARE [[planes]]). `multiProbe` widens
+    * the per-band gate from key equality to keys at most one bit apart. */
+  final class BandGeometry private (val bands: Int, val bitsPerBand: Int,
+      val multiProbe: Boolean)
+
+  /** The only geometries: the constructor is private. */
+  object BandGeometry {
+    /** 4 × 4-bit exact keys: `emb_dup_lsh_legacy`, `ann_lsh` and the
+      * packed `ann_lsh_buckets`. */
+    val Legacy: BandGeometry =
+      new BandGeometry(NumBands, BitsPerBand, multiProbe = false)
+    /** 4 × 4-bit keys with one-bit-flip probes: `ann_lsh_multiprobe`. */
+    val LegacyMultiProbe: BandGeometry =
+      new BandGeometry(NumBands, BitsPerBand, multiProbe = true)
+    /** 8 × 8-bit exact keys: `emb_dup_lsh_wide` and the vector intake gate. */
+    val Wide: BandGeometry =
+      new BandGeometry(WideNumBands, WideBitsPerBand, multiProbe = false)
+    /** 8 × 8-bit keys with one-bit-flip probes: the default `emb_dup_lsh`. */
+    val WideMultiProbe: BandGeometry =
+      new BandGeometry(WideNumBands, WideBitsPerBand, multiProbe = true)
   }
 
   /** Fitted quantizer constants, stashed when the ANN/SemDeDup queries run
@@ -333,32 +358,17 @@ object Similarity {
       numQueries: Int = AnnQueries, rerank: Int = Sq8Rerank): DataFrame =
     sq8TopK(s, dir, k, numQueries, rerank, labelFiltered = true)
 
-  /** doc-side LSH signature: bucket int from the sign bits of plane dots.
-    * The plane coefficient arrays are inlined as literals in ONE
-    * projection (r16: this was 16 chained withColumn plane columns + a
-    * drop — the optimizer collapsed them to exactly this projection, but
-    * the analyzer paid a full pass per withColumn; driver planning time,
-    * not executor time — guide §7.3). */
-  private def withBuckets(e: DataFrame): DataFrame = {
-    val bitCols = planes.zipWithIndex.map { case (p, i) =>
-      when(call_function("vec_dot", col("e"),
-        array(p.map(v => lit(v)): _*)) > 0, 1 << i).otherwise(0)
-    }
-    e.withColumn("bucket", bitCols.reduce(_ + _))
-  }
-
-  /** WIDE band keys for [[cosineDupLshWide]]: one 0..255 int column per
-    * band (`wb0..wb7`), each from the sign bits of that band's 8 planes.
-    * Keys stay unpacked — see [[cosineDupLshWide]] for why no 64-bit
-    * bucket. Same codegen shape as [[withBuckets]]: literal plane arrays,
-    * native vec_dot, a CASE-sum per key, zero UDFs. */
-  private def withWideBandKeys(e: DataFrame): DataFrame = {
-    // one projection, literal plane arrays inlined (r16: was 64 plane
-    // withColumns + 8 key withColumns + a drop — same plan after
-    // optimization, quadratic analyzer cost before it)
-    val keyCols = (0 until WideNumBands).map { j =>
-      val bits = (0 until WideBitsPerBand).map { b =>
-        val i = j * WideBitsPerBand + b
+  /** `g`'s band keys as int columns `wb0, wb1, …`, each from the sign
+    * bits of its band's planes. Keys stay unpacked: no 64-bit bucket whose
+    * signed shifts would have to stay aligned across engines (bit 63 of a
+    * packed BIGINT is the sign bit in both Spark and DuckDB). Literal
+    * plane arrays, native vec_dot, a CASE-sum per key, zero UDFs, all in
+    * one projection (r16: was one withColumn per plane and per key — same
+    * plan after optimization, quadratic analyzer cost before it). */
+  private def withBandKeys(e: DataFrame, g: BandGeometry): DataFrame = {
+    val keyCols = (0 until g.bands).map { j =>
+      val bits = (0 until g.bitsPerBand).map { b =>
+        val i = j * g.bitsPerBand + b
         when(call_function("vec_dot", col("e"),
           array(widePlanes(i).map(v => lit(v)): _*)) > 0, 1 << b).otherwise(0)
       }
@@ -367,51 +377,60 @@ object Similarity {
     e.select(col("*") +: keyCols: _*)
   }
 
+  private def bandKeyCols(g: BandGeometry): Seq[Column] =
+    (0 until g.bands).map(j => col(s"wb$j"))
+
+  /** The exact and probe band streams of a frame carrying `g`'s key
+    * columns, each row `carry ++ (band, key)`. The exact stream has one
+    * row per band; under multiprobe the probe stream adds each key's
+    * `bitsPerBand` one-bit-flip neighbours (otherwise it IS the exact
+    * stream). An equi-join of probe × exact on (band, key) is the band
+    * gate: `hamming(ka, kb) ≤ 1 ⟺ kb ∈ {ka} ∪ {ka ^ 2^i}`, so probing one
+    * side covers the symmetric ≤1-bit condition. */
+  private def bandStreams(df: DataFrame, g: BandGeometry,
+      carry: Seq[String]): (DataFrame, DataFrame) = {
+    val exact = (0 until g.bands).map { j =>
+      struct(lit(j).as("band"), col(s"wb$j").as("key"))
+    }
+    def exploded(structs: Seq[Column]) =
+      df.select(carry.map(col) :+ explode(array(structs: _*)).as("b"): _*)
+        .select(carry.map(col) ++
+          Seq(col("b.band").as("band"), col("b.key").as("key")): _*)
+    val exactStream = exploded(exact)
+    if (!g.multiProbe) (exactStream, exactStream)
+    else (exactStream, exploded((0 until g.bands).flatMap { j =>
+      exact(j) +: (0 until g.bitsPerBand).map { b =>
+        struct(lit(j).as("band"),
+          (col(s"wb$j").bitwiseXOR(lit(1 << b))).as("key"))
+      }
+    }))
+  }
+
   /** The deterministic LSH bucket assignment (vec_id → 16-bit hyperplane
-    * sign bucket) — the candidate-generation stage of [[lshTopK]] exposed
-    * as its own query. The hyperplanes are seeded constants and vec_dot is
-    * a left fold, so the bucket math is exactly SQL-expressible: the DuckDB
-    * oracle recomputes every sign bit from literal plane coefficients,
-    * hash-checking the stage that makes the ANN path approximate. */
-  def lshBuckets(s: SparkSession, dir: String): DataFrame =
-    withBuckets(embedded(s, dir))
-      .select(col("vec_id"), col("bucket"))
+    * sign bucket: [[BandGeometry.Legacy]]'s four band keys packed, band j
+    * in bits 4j..4j+3) — the candidate-generation stage of [[lshTopK]]
+    * exposed as its own query. The hyperplanes are seeded constants and
+    * vec_dot is a left fold, so the bucket math is exactly
+    * SQL-expressible: the DuckDB oracle recomputes every sign bit from
+    * literal plane coefficients, hash-checking the stage that makes the
+    * ANN path approximate. The keys come from [[withBandKeys]], the
+    * builder every band gate uses; the oracle's per-plane bits weighted
+    * 2^i are the same number, since plane 4j+b is bit b of band j. */
+  def lshBuckets(s: SparkSession, dir: String): DataFrame = {
+    val g = BandGeometry.Legacy
+    withBandKeys(embedded(s, dir), g)
+      .select(col("vec_id"), bandKeyCols(g).zipWithIndex
+        .map { case (k, j) => shiftleft(k, j * g.bitsPerBand) }
+        .reduce(_ + _).as("bucket"))
       .orderBy(col("vec_id"))
+  }
 
   /** Approximate cosine top-k: hyperplane-LSH candidates (any shared band)
     * verified by exact cosine. Same output shape as bruteForceTopK so
     * recall is directly measurable (see SimilaritySpec). */
   def lshTopK(s: SparkSession, dir: String, k: Int = 5,
-      numQueries: Int = 5): DataFrame = {
-    val e = withBuckets(embedded(s, dir))
-    val bandStructs = (0 until NumBands).map { j =>
-      struct(lit(j).as("band"),
-        expr(s"(bucket >> ${j * BitsPerBand}) & ${(1 << BitsPerBand) - 1}").as("key"))
-    }
-    val bands = e.select(col("vec_id"), col("e"), col("nrm"),
-        explode(array(bandStructs: _*)).as("b"))
-      .select(col("vec_id"), col("e"), col("nrm"),
-        col("b.band").as("band"), col("b.key").as("key"))
-
-    val q = bands.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"),
-        col("nrm").as("qn"), col("band"), col("key"))
-    val c = bands.select(col("vec_id").as("c_id"), col("e").as("ce"),
-      col("nrm").as("cn"), col("band"), col("key"))
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id").asc)
-    broadcast(q).join(c, Seq("band", "key"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("qe"), col("qn"), col("c_id"), col("ce"), col("cn"))
-      .distinct()
-      .withColumn("sim", round(
-        expr("vec_dot(qe, ce)") / (sqrt(col("qn")) * sqrt(col("cn"))), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("c_id"), col("sim"))
-      .orderBy(col("q_id"), col("rnk"))
-  }
+      numQueries: Int = 5): DataFrame =
+    lshTopKOver(s, dir, BandGeometry.Legacy, k, numQueries)
 
   /** Multi-probe LSH top-k: each query probes its own band key AND every
     * key at hamming distance 1 within the band (bit-flip probes) — the
@@ -423,33 +442,18 @@ object Similarity {
     * scales. Fully deterministic like [[lshTopK]], so the oracle checks
     * it end-to-end via the equivalent hamming≤1 band condition. */
   def lshTopKMultiProbe(s: SparkSession, dir: String, k: Int = 5,
-      numQueries: Int = 5): DataFrame = {
-    val e = withBuckets(embedded(s, dir))
-    val mask = (1 << BitsPerBand) - 1
-    def bandKey(j: Int) =
-      expr(s"(bucket >> ${j * BitsPerBand}) & $mask")
+      numQueries: Int = 5): DataFrame =
+    lshTopKOver(s, dir, BandGeometry.LegacyMultiProbe, k, numQueries)
 
-    val bandStructs = (0 until NumBands).map { j =>
-      struct(lit(j).as("band"), bandKey(j).as("key"))
-    }
-    val c = e.select(col("vec_id"), col("e"), col("nrm"),
-        explode(array(bandStructs: _*)).as("b"))
-      .select(col("vec_id").as("c_id"), col("e").as("ce"),
-        col("nrm").as("cn"), col("b.band").as("band"), col("b.key").as("key"))
-
-    // query side: exact key + one flipped-bit probe per plane of the band
-    val probeStructs = (0 until NumBands).flatMap { j =>
-      struct(lit(j).as("band"), bandKey(j).as("key")) +:
-        (0 until BitsPerBand).map { b =>
-          struct(lit(j).as("band"),
-            bandKey(j).bitwiseXOR(lit(1 << b)).as("key"))
-        }
-    }
-    val q = e.filter(col("vec_id") < numQueries)
+  private def lshTopKOver(s: SparkSession, dir: String, g: BandGeometry,
+      k: Int, numQueries: Int): DataFrame = {
+    val e = withBandKeys(embedded(s, dir), g)
+    val (exact, probe) = bandStreams(e, g, Seq("vec_id", "e", "nrm"))
+    val q = probe.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("e").as("qe"),
-        col("nrm").as("qn"), explode(array(probeStructs: _*)).as("b"))
-      .select(col("q_id"), col("qe"), col("qn"),
-        col("b.band").as("band"), col("b.key").as("key"))
+        col("nrm").as("qn"), col("band"), col("key"))
+    val c = exact.select(col("vec_id").as("c_id"), col("e").as("ce"),
+      col("nrm").as("cn"), col("band"), col("key"))
 
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("c_id").asc)
@@ -590,20 +594,32 @@ object Similarity {
       pruneCells = true)
   }
 
-  /** Embedding near-dup pairs at scale: hyperplane-LSH band buckets gate
-    * the exact cosine verify, so candidates ∝ bucket collisions instead of
-    * n² — the scale path [[cosineDupPairs]]'s doc promises. Unlike the
-    * top-k ANN path this whole operator is deterministic: the bucket bits
-    * are seeded constants, so the DuckDB oracle recomputes them from
-    * literal plane coefficients and applies the same ≥1-shared-band gate —
-    * the emitted pair set is hash-checked end to end. (Recall vs the
-    * ungated exact scan is a measured property in SimilaritySpec, not part
-    * of the correctness contract.) On duplicate-dense corpora this
-    * 4×4-bit geometry hits a measured collision floor (×30: 1004 s vs
-    * wide_mp's 336.7 s at LOWER recall — BENCH.md r12 A/B), so as of r13
-    * it is the `emb_dup_lsh_legacy` slot: the default `emb_dup_lsh`
-    * binding points at [[cosineDupLshWideMultiProbe]]; see
-    * [[widePlanes]].
+  /** Embedding near-dup pairs at scale: hyperplane-LSH band keys under
+    * `geometry` gate the exact cosine verify, so candidates ∝ band
+    * collisions instead of n² — the scale path [[cosineDupPairs]]'s doc
+    * promises. Unlike the top-k ANN path this whole operator is
+    * deterministic: the key bits come from seeded-constant planes, so the
+    * DuckDB oracle recomputes them from literal plane coefficients and
+    * applies the same ≥1-band gate — the emitted pair set is hash-checked
+    * end to end. (Recall vs the ungated exact scan is a measured property
+    * in SimilaritySpec and the [[graft.ops.RetrievalQuality.embDupRecall]]
+    * rows, not part of the correctness contract.) The three geometries:
+    *   - [[BandGeometry.Legacy]] (`emb_dup_lsh_legacy`): 4 × 4-bit keys
+    *     hit a measured collision floor on duplicate-dense corpora (×30:
+    *     1004 s vs wide multiprobe's 336.7 s at LOWER recall — BENCH.md
+    *     r12 A/B; the candidate cap RAISED runtime 36% because the floor
+    *     is the scan itself), so it is no longer the default.
+    *   - [[BandGeometry.Wide]] (`emb_dup_lsh_wide`): 8 × 8-bit keys, 256
+    *     values per band, drop the random-collision floor ~16× per band
+    *     (see [[widePlanes]]), paying recall near the 0.35 threshold.
+    *   - [[BandGeometry.WideMultiProbe]] (`emb_dup_lsh`, the default): a
+    *     pair is a candidate when some band's keys differ by ≤ 1 bit. The
+    *     left stream carries the one-bit-flip probes, the right stays
+    *     exact; the oracle states the symmetric form directly via
+    *     `bit_count(xor(..)) ≤ 1`. Per-band collision probability rises
+    *     from p⁸ to p⁸ + 8·p⁷(1−p) — a large recall gain at dup-grade
+    *     agreement rates — while a random pair's per-band rate is 9/256,
+    *     still well under the legacy geometry's 1/16.
     *
     * `maxId` restricts the pair domain BEFORE band generation. A pair's
     * collision is a property of its two vectors alone (seeded-constant
@@ -615,100 +631,20 @@ object Similarity {
     * needs only the exact scan's bounded domain: filtering AFTER this
     * operator's checkpoint would pay the full 15× replica cost for a
     * constant-size slice). */
-  def cosineDupLsh(s: SparkSession, dir: String,
+  def cosineDupLsh(s: SparkSession, dir: String, geometry: BandGeometry,
       threshold: Double = 0.35, maxId: Option[Long] = None,
       maxCandidatesPerDoc: Option[Int] = None): DataFrame = {
     val restricted = maxId.foldLeft(embedded(s, dir))(
       (df, m) => df.filter(col("vec_id") < m))
-    val e = withBuckets(restricted)
-      .select(col("vec_id"), col("e"), col("nrm"), col("bucket")).cache()
+    val e = withBandKeys(restricted, geometry)
+      .select(col("vec_id") +: col("e") +: col("nrm") +:
+        bandKeyCols(geometry): _*).cache()
     val nVecs = e.count()
               // force: the bands scan + two verify joins are concurrent
               // consumers — unmaterialized, each would recompute the
-              // embed+16-plane-dot pipeline itself
-    val bandStructs = (0 until NumBands).map { j =>
-      struct(lit(j).as("band"),
-        expr(s"(bucket >> ${j * BitsPerBand}) & ${(1 << BitsPerBand) - 1}").as("key"))
-    }
-    val bands = e.select(col("vec_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("vec_id"), col("b.band").as("band"), col("b.key").as("key"))
-    bandVerifiedPairs(e, nVecs, bands, threshold, maxCandidatesPerDoc)
-  }
-
-  /** [[cosineDupLsh]] over the WIDE band geometry ([[widePlanes]]: 8 bands
-    * × 8-bit keys). Identical contract — seeded-constant planes, ≥1-shared-
-    * band candidate gate, exact cosine verify, full DuckDB hash oracle —
-    * but 256 distinct values per band instead of 16, so the random-collision
-    * floor that made the default geometry a measured scale-killer on
-    * duplicate-dense corpora (r10 ×30: ~9k vectors per bucket → ~10⁹
-    * pre-distinct candidate rows, 567 s; the candidate cap RAISED runtime
-    * 36% because the floor is the scan itself) drops ~16× per band. The
-    * price is recall near the 0.35 threshold — reported as the
-    * `hyperplane_band_wide` row of
-    * [[graft.ops.RetrievalQuality.embDupRecall]].
-    *
-    * Band keys are computed DIRECTLY as 8 independent 0..255 ints (one
-    * column per band) rather than packed into a 64-bit bucket and shifted
-    * back out: same plan shape, no signed-shift semantics to keep aligned
-    * across engines (bit 63 of a packed BIGINT would be the sign bit in
-    * both Spark and DuckDB). */
-  def cosineDupLshWide(s: SparkSession, dir: String,
-      threshold: Double = 0.35, maxId: Option[Long] = None,
-      maxCandidatesPerDoc: Option[Int] = None): DataFrame = {
-    val restricted = maxId.foldLeft(embedded(s, dir))(
-      (df, m) => df.filter(col("vec_id") < m))
-    val e = withWideBandKeys(restricted)
-      .select(col("vec_id") +: col("e") +: col("nrm") +:
-        (0 until WideNumBands).map(j => col(s"wb$j")): _*).cache()
-    val nVecs = e.count() // force — same concurrent-consumer rationale
-    val bandStructs = (0 until WideNumBands).map { j =>
-      struct(lit(j).as("band"), col(s"wb$j").as("key"))
-    }
-    val bands = e.select(col("vec_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("vec_id"), col("b.band").as("band"), col("b.key").as("key"))
-    bandVerifiedPairs(e, nVecs, bands, threshold, maxCandidatesPerDoc)
-  }
-
-  /** [[cosineDupLshWide]] with per-band MULTIPROBE: a pair is a candidate
-    * when some band's two 8-bit keys differ by ≤ 1 bit (vs exact key
-    * equality). Implemented asymmetrically — the left band stream emits
-    * each key plus its 8 one-bit-flip probes, the right stream stays
-    * exact — which is the same ≤1-bit semantics because
-    * `hamming(ka, kb) ≤ 1 ⟺ kb ∈ {ka} ∪ {ka ^ 2^i}`; the oracle states
-    * the symmetric form directly via `bit_count(xor(..)) ≤ 1` (the same
-    * cross-formulation check [[lshTopKMultiProbe]] uses). The point on
-    * the (recall, cost) curve: per-band collision probability rises from
-    * p⁸ to p⁸ + 8·p⁷(1−p) — a large recall gain at dup-grade agreement
-    * rates — while a random pair's per-band rate is 9/256, still well
-    * under the default geometry's 1/16, so collision lists stay bounded
-    * where the 4×4-bit geometry floored. Measured against both siblings
-    * as the `hyperplane_band_wide_mp` row of
-    * [[graft.ops.RetrievalQuality.embDupRecall]] and the ×30 A/B in
-    * BENCH.md. */
-  def cosineDupLshWideMultiProbe(s: SparkSession, dir: String,
-      threshold: Double = 0.35, maxId: Option[Long] = None,
-      maxCandidatesPerDoc: Option[Int] = None): DataFrame = {
-    val restricted = maxId.foldLeft(embedded(s, dir))(
-      (df, m) => df.filter(col("vec_id") < m))
-    val e = withWideBandKeys(restricted)
-      .select(col("vec_id") +: col("e") +: col("nrm") +:
-        (0 until WideNumBands).map(j => col(s"wb$j")): _*).cache()
-    val nVecs = e.count()
-    val exactStructs = (0 until WideNumBands).map { j =>
-      struct(lit(j).as("band"), col(s"wb$j").as("key"))
-    }
-    // probe stream: the key itself plus its 8 one-bit neighbors
-    val probeStructs = (0 until WideNumBands).flatMap { j =>
-      exactStructs(j) +: (0 until WideBitsPerBand).map { b =>
-        struct(lit(j).as("band"),
-          (col(s"wb$j").bitwiseXOR(lit(1 << b))).as("key"))
-      }
-    }
-    def exploded(structs: Seq[org.apache.spark.sql.Column]) =
-      e.select(col("vec_id"), explode(array(structs: _*)).as("b"))
-        .select(col("vec_id"), col("b.band").as("band"), col("b.key").as("key"))
-    bandVerifiedPairs(e, nVecs, exploded(probeStructs), threshold,
-      maxCandidatesPerDoc, rightBands = Some(exploded(exactStructs)))
+              // embed+plane-dot pipeline itself
+    val (exact, probe) = bandStreams(e, geometry, Seq("vec_id"))
+    bandVerifiedPairs(e, nVecs, probe, exact, threshold, maxCandidatesPerDoc)
   }
 
   /** Incremental embedding near-dup intake — the vector twin of
@@ -762,9 +698,9 @@ object Similarity {
     * embeddings frame — the unit the in-query intake computes and the
     * persisted signature index stores. */
   private[graft] def wideSigOf(raw: DataFrame): DataFrame =
-    withWideBandKeys(embeddedOf(raw))
+    withBandKeys(embeddedOf(raw), BandGeometry.Wide)
       .select(col("vec_id") +: col("e") +: col("nrm") +:
-        (0 until WideNumBands).map(j => col(s"wb$j")): _*)
+        bandKeyCols(BandGeometry.Wide): _*)
 
   /** Residue-class delta split over an embeddings frame — the vector twin
     * of [[graft.ops.Dedup.deltaSplit]]: engine-portable 48-bit hash of the
@@ -796,12 +732,8 @@ object Similarity {
       threshold: Double): DataFrame = {
     val inc = incSig.cache(); val nInc = inc.count()
     val ex = exSig.cache(); val nEx = ex.count()
-    val bandStructs = (0 until WideNumBands).map { j =>
-      struct(lit(j).as("band"), col(s"wb$j").as("key"))
-    }
     def bandsOf(df: DataFrame) =
-      df.select(col("vec_id"), explode(array(bandStructs: _*)).as("b"))
-        .select(col("vec_id"), col("b.band").as("band"), col("b.key").as("key"))
+      bandStreams(df, BandGeometry.Wide, Seq("vec_id"))._1
     val cands = bandsOf(inc).as("x")
       .join(bandsOf(ex).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
@@ -830,19 +762,17 @@ object Similarity {
     graft.ops.Caching.materializeAndRelease(out, inc, ex)
   }
 
-  /** Shared candidate-gate → budget → exact-cosine-verify tail of the
-    * banded near-dup operators; `e` must be the CACHED embedded frame
-    * (vec_id, e, nrm, …) and `bands` its exploded (vec_id, band, key)
-    * view. `rightBands` (multiprobe) joins an asymmetric right stream:
-    * probes only on the left side still cover the symmetric ≤1-bit gate
-    * under the `id_a < id_b` ordering, because Hamming distance is
-    * symmetric — `ka ^ 2^i = kb ⟺ kb ^ 2^i = ka`, so whichever side
-    * carries the flip finds the same pair. */
-  private def bandVerifiedPairs(e: DataFrame, nVecs: Long, bands: DataFrame,
-      threshold: Double, maxCandidatesPerDoc: Option[Int],
-      rightBands: Option[DataFrame] = None): DataFrame = {
-    val right = rightBands.getOrElse(bands)
-    val cands0 = bands.as("x").join(right.as("y"),
+  /** Candidate-gate → budget → exact-cosine-verify tail of
+    * [[cosineDupLsh]]; `e` must be the CACHED embedded frame (vec_id, e,
+    * nrm, …) and `left`/`right` its (vec_id, band, key) probe and exact
+    * streams ([[bandStreams]]). Probes only on the left side still cover
+    * the symmetric ≤1-bit gate under the `id_a < id_b` ordering, because
+    * Hamming distance is symmetric — `ka ^ 2^i = kb ⟺ kb ^ 2^i = ka`, so
+    * whichever side carries the flip finds the same pair. */
+  private def bandVerifiedPairs(e: DataFrame, nVecs: Long, left: DataFrame,
+      right: DataFrame, threshold: Double,
+      maxCandidatesPerDoc: Option[Int]): DataFrame = {
+    val cands0 = left.as("x").join(right.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))

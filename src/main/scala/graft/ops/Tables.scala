@@ -10,12 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * schema, and a 212-query bench session constructs each query 2–3 times,
   * so the SAME static file's footer was read hundreds of times (~50–80 ms
   * of job + driver latency per construction, visible as `parquet at
-  * Tables.scala` jobs in every JobProfile trace). The cache holds only
-  * METADATA (a StructType — what a catalog/metastore provides in a real
-  * deployment); the data is re-read from parquet by every invocation, so
-  * nothing computed is cached across runs. Keyed weakly by session (dies
-  * with it); safe because a path's schema cannot change under a session —
-  * specs always write fresh temp dirs, appends don't alter schemas. */
+  * Tables.scala` jobs in every per-job trace, OPTIMIZATION_r16.md §3).
+  * The cache holds only METADATA (a StructType — what a catalog/metastore
+  * provides in a real deployment); the data is re-read from parquet by
+  * every invocation, so nothing computed is cached across runs. Keyed
+  * weakly by session (dies with it); safe because a path's schema cannot
+  * change under a session — specs always write fresh temp dirs, appends
+  * don't alter schemas. */
 object Tables {
   private val schemaCache =
     new java.util.WeakHashMap[SparkSession,
@@ -45,22 +46,27 @@ object Tables {
     spark.read.schema(sch).parquet(p)
   }
 
-  /** Drop cached schemas for `pathPrefix` and everything under it — the
-    * guard the cache's "a path's schema cannot change under a session"
-    * assumption needs on the one class of writers that CAN change it:
-    * artifact REBUILD paths (r16 verdict #8). Every
+  /** Drop cached schemas for `root` and every path under it (`root/…`;
+    * a sibling that merely shares the string prefix, `root2`, keeps its
+    * entry) — the guard the cache's "a path's schema cannot change under
+    * a session" assumption needs on the one class of writers that CAN
+    * change it: artifact REBUILD paths (r16 verdict #8). Every
     * [[graft.sources.IndexStore]] overwrite-mode builder calls this after
     * writing, so an in-session rebuild that evolves a schema is re-read
     * correctly instead of through a stale StructType. Appends stay
     * uncovered by design: they run the same fixed builder projection, so
     * the schema is unchanged — busting them would re-introduce the
     * per-micro-batch footer-read job this cache removed. */
-  def bustSchema(spark: SparkSession, pathPrefix: String): Unit =
+  def bustSchema(spark: SparkSession, root: String): Unit =
     schemaCache.synchronized {
       val m = schemaCache.get(spark)
       if (m != null) {
+        val under = root.stripSuffix("/") + "/"
         val it = m.keySet.iterator()
-        while (it.hasNext) if (it.next().startsWith(pathPrefix)) it.remove()
+        while (it.hasNext) {
+          val p = it.next()
+          if (p == root || p.startsWith(under)) it.remove()
+        }
       }
     }
 

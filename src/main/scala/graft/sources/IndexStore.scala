@@ -457,10 +457,11 @@ object IndexStore {
     sets.count() // freq + prefix derivations share the one set scan
     Dedup.prefixFreqOf(sets)
       .write.mode("overwrite").parquet(s"$root/freq")
+    graft.ops.Tables.bustSchema(s, s"$root/freq")
     Dedup.prefixesUnder(sets, graft.ops.Tables.readCached(s, s"$root/freq"), threshold)
       .write.mode("overwrite").parquet(s"$root/prefixes")
     sets.unpersist()
-    ()
+    graft.ops.Tables.bustSchema(s, s"$root/prefixes")
   }
 
   // --- ANN (IVF) standing index ---------------------------------------------

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -11,10 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * `sbt "runMain graft.streaming.SessionizeDemo"` */
 object SessionizeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     implicit val sql = spark.sqlContext
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end training-corpus pipeline demo: redaction front door →
   * curate (exact + near-dup dedup + quality gate) → mixture sample →
   * packing manifest → contamination check → incremental-batch triage →
@@ -10,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     import org.apache.spark.sql.functions.col
     import graft.ops.{Corpus, CorpusLayout, Dedup, Redaction, Tables, Upsert}
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end intake pipeline demo — round 6's theme in one run: build
@@ -15,10 +14,7 @@ import org.apache.spark.sql.functions._
 object IntakeDemo {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     import spark.implicits._
     import graft.ops.{Dedup, Tables, TextAnalysis}
     import graft.sources.IndexStore

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a ×N replica of a driver testdata directory for scale-escalation
@@ -35,13 +35,10 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "target/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // the events table's TIMESTAMP(NANOS) column reads as BIGINT nanos,
-      // same as graft.ops.Tables.events; the replica stores plain INT64
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    // the events table's TIMESTAMP(NANOS) column reads as BIGINT nanos,
+    // same as graft.ops.Tables.events; the replica stores plain INT64
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(name: String)(f: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.collab.{ParquetTableStore, Rating, Schemas}
 
@@ -9,10 +8,7 @@ import graft.collab.{ParquetTableStore, Rating, Schemas}
   * missing-option error. `sbt "runMain graft.tools.StoreSourceDemo"` */
 object StoreSourceDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .appName("graft-source-demo")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-demo").toString

@@ -1,0 +1,38 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source-level rules for `src/main`: every entry point gets its session
+  * from [[Session]], and the only env knobs are the declared contract. */
+class SourceScanSpec extends AnyFunSuite {
+  private val main = Paths.get("src/main/scala")
+
+  private def sources: Seq[(Path, String)] = {
+    assert(Files.isDirectory(main), s"run from the repo root: $main missing")
+    val walk = Files.walk(main)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toList
+    finally walk.close()
+  }
+
+  test("src/main builds a SparkSession only in the Session factory") {
+    val builders = sources.collect {
+      case (p, src) if """SparkSession\s*\.\s*builder""".r.findFirstIn(src)
+          .isDefined => main.relativize(p).toString
+    }
+    assert(builders === Seq("graft/Session.scala"))
+  }
+
+  test("src/main names no SPARK_GRAFT_* env var outside the declared " +
+      "contract") {
+    val contract = Set("CPUS", "SF_DIR", "WARMUP", "BENCH_OUT")
+    val knobs = sources.flatMap { case (p, src) =>
+      """SPARK_GRAFT_([A-Z0-9_]+)""".r.findAllMatchIn(src).map(_.group(1))
+        .filterNot(contract).map(k => s"${main.relativize(p)}: SPARK_GRAFT_$k")
+    }
+    assert(knobs === Nil)
+  }
+}

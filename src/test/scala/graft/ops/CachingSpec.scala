@@ -3,6 +3,8 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The session-hygiene contract (r15, scoped by the r16 ADVICE fix):
   * stray localCheckpoints (invisible to clearCache) that
   * materializeAndRelease pinned for earlier queries are released
@@ -65,5 +67,34 @@ class CachingSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(vals === Seq((1L, 10.0), (2L, 20.0)),
       "untracked checkpoint must stay readable after releaseStrays")
+  }
+
+  test("materializeAndRelease's eager checkpoint reaches a registered " +
+      "QueryExecutionListener with its full plan (ExplainAll's source)") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = ran.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val docs = Tables.documents(spark, dir)
+      val joined = docs.select(col("doc_id"), col("lang"))
+        .join(docs.groupBy(col("lang")).agg(count(lit(1)).as("n")), "lang")
+      val out = Caching.materializeAndRelease(joined)
+      // the returned frame's own plan is only the checkpoint scan
+      assert(out.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"))
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      def checkpoints = ran.asScala.filter(_._1 == "localCheckpoint").map(_._2)
+      while (checkpoints.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(checkpoints.nonEmpty, "no localCheckpoint reached the listener")
+      assert(checkpoints.exists(_.contains("Join")),
+        s"checkpoint plan is not the pre-checkpoint join plan: $checkpoints")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Similarity.BandGeometry
 import org.apache.spark.sql.functions._
 
 /** Invariant tests on sf0.001 — value-level correctness is enforced by the
@@ -497,7 +498,7 @@ class SimilaritySpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val maxId = 300L
     val exact = keyed(Similarity.cosineDupPairs(spark, dir, maxId).collect())
-    val gated = keyed(Similarity.cosineDupLsh(spark, dir)
+    val gated = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Legacy)
       .filter(col("id_a") < maxId && col("id_b") < maxId).collect())
     assert(gated.keySet.subsetOf(exact.keySet),
       "the band gate may drop pairs but must never invent them")
@@ -512,9 +513,10 @@ class SimilaritySpec extends SparkSpec {
       "equal sims, per-doc ≤ budget, deterministic") {
     def keyed(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = keyed(Similarity.cosineDupLsh(spark, dir).collect())
+    val exact = keyed(
+      Similarity.cosineDupLsh(spark, dir, BandGeometry.Legacy).collect())
     val cap = 2
-    val capped = keyed(Similarity.cosineDupLsh(spark, dir,
+    val capped = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Legacy,
       maxCandidatesPerDoc = Some(cap)).collect())
     assert(capped.keySet.subsetOf(exact.keySet),
       "the budget may drop pairs but must never invent them")
@@ -523,7 +525,7 @@ class SimilaritySpec extends SparkSpec {
     // can only be fewer
     capped.keySet.groupBy(_._1).foreach { case (a, ps) =>
       assert(ps.size <= cap, s"id_a=$a exceeds budget") }
-    val again = keyed(Similarity.cosineDupLsh(spark, dir,
+    val again = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Legacy,
       maxCandidatesPerDoc = Some(cap)).collect())
     assert(again === capped, "capped run must be deterministic")
   }
@@ -541,7 +543,7 @@ class SimilaritySpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val maxId = 300L
     val exact = keyed(Similarity.cosineDupPairs(spark, dir, maxId).collect())
-    val gated = keyed(Similarity.cosineDupLshWide(spark, dir)
+    val gated = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide)
       .filter(col("id_a") < maxId && col("id_b") < maxId).collect())
     assert(gated.keySet.subsetOf(exact.keySet),
       "wide bands may drop pairs but must never invent them")
@@ -549,12 +551,13 @@ class SimilaritySpec extends SparkSpec {
     // collision is a two-vector property: restricting BEFORE banding must
     // emit exactly the post-filtered pairs of the unrestricted run
     val restricted = keyed(
-      Similarity.cosineDupLshWide(spark, dir, maxId = Some(maxId)).collect())
+      Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide,
+        maxId = Some(maxId)).collect())
     assert(restricted === gated, "maxId must commute with the band gate")
     // the family's standard budget contract: capped ⊆ exact band output
-    val capped = keyed(Similarity.cosineDupLshWide(spark, dir,
+    val capped = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide,
       maxCandidatesPerDoc = Some(1)).collect())
-    val full = keyed(Similarity.cosineDupLshWide(spark, dir).collect())
+    val full = keyed(Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide).collect())
     assert(capped.keySet.subsetOf(full.keySet))
     capped.keySet.groupBy(_._1).foreach { case (a, ps) =>
       assert(ps.size <= 1, s"id_a=$a exceeds budget") }
@@ -567,8 +570,10 @@ class SimilaritySpec extends SparkSpec {
     val maxId = 300L
     val exact = keyed(Similarity.cosineDupPairs(spark, dir, maxId).collect())
     val wide = keyed(
-      Similarity.cosineDupLshWide(spark, dir, maxId = Some(maxId)).collect())
-    val mp = keyed(Similarity.cosineDupLshWideMultiProbe(spark, dir,
+      Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide,
+        maxId = Some(maxId)).collect())
+    val mp = keyed(Similarity.cosineDupLsh(spark, dir,
+      BandGeometry.WideMultiProbe,
       maxId = Some(maxId)).collect())
     // hamming ≤ 1 gates a superset of hamming = 0, and both verify by the
     // same exact threshold — so mp's verified pairs must contain wide's

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.Similarity.BandGeometry
 import org.apache.spark.sql.DataFrame
 
 /** RetrievalQuality's reports re-derived driver-side: collect the member
@@ -75,11 +76,12 @@ class RetrievalQualitySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val report = reportMap(RetrievalQuality.embDupRecall(spark, dir))
     val exact = pairSet(Similarity.cosineDupPairs(spark, dir), "id_a", "id_b")
-    val lsh = pairSet(Similarity.cosineDupLsh(spark, dir)
+    val lsh = pairSet(Similarity.cosineDupLsh(spark, dir, BandGeometry.Legacy)
       .filter(col("id_a") < 300 && col("id_b") < 300), "id_a", "id_b")
-    val wide = pairSet(Similarity.cosineDupLshWide(spark, dir)
+    val wide = pairSet(Similarity.cosineDupLsh(spark, dir, BandGeometry.Wide)
       .filter(col("id_a") < 300 && col("id_b") < 300), "id_a", "id_b")
-    val wideMp = pairSet(Similarity.cosineDupLshWideMultiProbe(spark, dir)
+    val wideMp = pairSet(
+      Similarity.cosineDupLsh(spark, dir, BandGeometry.WideMultiProbe)
       .filter(col("id_a") < 300 && col("id_b") < 300), "id_a", "id_b")
     check(report, exact,
       Map("hyperplane_band_legacy" -> lsh, "hyperplane_band_wide" -> wide,

@@ -47,4 +47,46 @@ class SchemaCacheSpec extends SparkSpec {
     assert(idx.digests.count() === 2L)
     assert(idx.digests.filter(col("doc_id") === 10L).count() === 1L)
   }
+
+  test("bustSchema evicts the path and the paths under it, never a " +
+      "sibling that merely shares its string prefix") {
+    val root = java.nio.file.Files.createTempDirectory("bustsib").toString
+    for (p <- Seq(s"$root/idx/t", s"$root/idx2")) {
+      Seq((1L, "a")).toDF("id", "s").write.parquet(p)
+      assert(Tables.readCached(spark, p).columns.toSeq === Seq("id", "s"))
+      // evolve the files without a bust: only a cache hit still reads the
+      // old schema, so the columns show whether the entry survived
+      Seq((2L, "b", 7.5)).toDF("id", "s", "x")
+        .write.mode("overwrite").parquet(p)
+    }
+    Tables.bustSchema(spark, s"$root/idx")
+    assert(Tables.readCached(spark, s"$root/idx/t").columns.toSeq ===
+      Seq("id", "s", "x"), "a path under the busted root must be re-read")
+    assert(Tables.readCached(spark, s"$root/idx2").columns.toSeq ===
+      Seq("id", "s"), "busting idx must keep the sibling idx2's entry")
+  }
+
+  test("rebuildPrefix busts the freq and prefixes tables it overwrites") {
+    val root = java.nio.file.Files.createTempDirectory("bustprefix").toString
+    val docs = Seq((10L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (11L, "one two three four five six seven eight nine ten"))
+      .toDF("doc_id", "text")
+    graft.sources.IndexStore.buildPrefix(docs, root)
+    val built = graft.sources.IndexStore.readPrefix(spark, root)
+    val (freqCols, prefixCols) =
+      (built.freq.columns.toSeq, built.prefixes.columns.toSeq)
+    val nPrefixes = built.prefixes.count()
+    // prime the cache with FOREIGN schemas at both rebuilt paths
+    for (t <- Seq("freq", "prefixes")) {
+      Seq((1, 2)).toDF("a", "b").write.mode("overwrite").parquet(s"$root/$t")
+      Tables.bustSchema(spark, s"$root/$t")
+      assert(Tables.readCached(spark, s"$root/$t").columns.toSeq ===
+        Seq("a", "b"))
+    }
+    graft.sources.IndexStore.rebuildPrefix(spark, root)
+    val idx = graft.sources.IndexStore.readPrefix(spark, root)
+    assert(idx.freq.columns.toSeq === freqCols)
+    assert(idx.prefixes.columns.toSeq === prefixCols)
+    assert(idx.prefixes.count() === nPrefixes)
+  }
 }
