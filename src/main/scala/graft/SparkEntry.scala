@@ -28,24 +28,16 @@ object SparkEntry {
     * unreleased cache blocks accumulate until eviction thrash slows every
     * later query (~2× total observed). Each query therefore drops the
     * previous query's cache at construction time; its own caches are
-    * created after the clear. clearCache() misses one block class:
-    * localCheckpointed frames (every materializeAndRelease result) are
-    * invisible to the CacheManager, so Caching.releaseStrays drops the
-    * ones earlier queries pinned — session hygiene at measured ≈zero
-    * cost (the round-15 controlled A/B, BENCH.md round 15, ACQUITTED
-    * pinned strays as the r14 pair-family regression's mechanism: the
-    * keep-strays control arm ran faster than the release arms, within
-    * weather; that regression was sustained machine load). The memoized
-    * dashboard ground truths are RDD-id-protected and survive.
-    * Single-consumer contract: constructing a query invalidates earlier
-    * queries' materialized results (their truncated-lineage blocks drop
-    * and cannot recompute) — hold at most one registry result, or copy
-    * it out first (Caching.releaseStrays scaladoc). */
+    * created after the clear. clearCache() misses the localCheckpointed
+    * results of earlier queries, which [[graft.State.releaseStrays]]
+    * drops (its scaladoc and [[graft.State]]'s single-consumer contract
+    * say what that costs a caller holding an earlier result); memoized
+    * frames and resident artifacts survive. */
   private def fresh(fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame =
     (s, d) => {
       s.sqlContext.clearCache()
-      graft.ops.Caching.releaseStrays(s)
+      State.releaseStrays(s)
       fn(s, d)
     }
 

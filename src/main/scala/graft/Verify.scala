@@ -45,6 +45,17 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    // cf_als_score_saved's oracle reads the saved model's factor parquet
+    // after this JVM exits, and the application's artifacts are deleted
+    // when it stops: keep a copy inside that query's output directory,
+    // where the underscore hides it from readers of the output
+    for (model <- graft.ops.CollabEvents.savedModelPath;
+         out = new java.io.File(s"$outDir/cf_als_score_saved")
+         if out.isDirectory) {
+      val kept = new java.io.File(out, "_model")
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(model), kept)
+      graft.ops.CollabEvents.savedModelPath = Some(kept.getPath)
+    }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(SparkEntry.oracleSql))
     spark.stop()

@@ -16,9 +16,12 @@ import org.apache.spark.sql.functions._
   * frontier⋈edges equi-join (cost ∝ edges incident to the CURRENT
   * frontier, not the graph) plus an anti-join against the visited set,
   * both keyed on the same hash partitioning. Rounds are bounded by
-  * `maxHops`, so lineage is truncated per round and the plan stays O(1)
-  * in round count. Nothing here is ever proportional to corpus size —
-  * only to the near-dup graph, which is duplicate-density-sized.
+  * `maxHops`, and each round's frontier is checkpointed, but the visited
+  * set is a LAZY union of the checkpointed frontiers: round i's anti-join
+  * rescans all i earlier frontier frames, so a run costs O(maxHops²)
+  * frontier scans and the returned plan is a union of maxHops + 1 scans.
+  * Nothing here is ever proportional to corpus size — only to the
+  * near-dup graph, which is duplicate-density-sized.
   */
 object Bfs {
 

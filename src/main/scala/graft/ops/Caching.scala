@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Cache lifecycle for multi-consumer pipelines.
+import graft.State
+
+/** Cache lifecycle for multi-consumer pipelines; the state it keeps lives
+  * in [[graft.State]]'s session scope.
   *
   * Two rules this codebase learned the hard way (BENCH.md round 1/2):
   *   1. A cached-but-unmaterialized frame consumed by 2+ branches of one job
@@ -19,109 +22,22 @@ object Caching {
     * and truncates lineage), then release the upstream caches it consumed.
     * Only for results that are small by construction (pair sets ∝ duplicate
     * density, per-doc scalars — never full-corpus frames): the caller gets a
-    * self-contained frame and owns no cleanup — [[releaseStrays]] reclaims
-    * the pinned blocks when the NEXT registry query starts. The pinned RDD
-    * ids are registered here (snapshot-diff around the eager checkpoint) so
-    * the release touches ONLY blocks this function created: a truncated-
-    * lineage checkpoint cannot recompute once its blocks drop, so an
-    * untracked release would break any OTHER checkpoint the session holds
-    * (a streaming micro-batch's pinned frame, a user's own localCheckpoint)
-    * instead of merely un-caching it (r15 ADVICE). */
+    * self-contained frame and owns no cleanup — [[graft.State.releaseStrays]]
+    * reclaims the pinned blocks when the NEXT registry query starts. The
+    * pinned RDD ids are registered releasable (snapshot-diff around the
+    * eager checkpoint) so the release touches ONLY blocks this function
+    * created: a truncated-lineage checkpoint cannot recompute once its
+    * blocks drop, so an untracked release would break any OTHER checkpoint
+    * the session holds (a streaming micro-batch's pinned frame, a user's
+    * own localCheckpoint) instead of merely un-caching it (r15 ADVICE). */
   def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
     val s = out.sparkSession
     val before = s.sparkContext.getPersistentRDDs.keySet
     val r = out.localCheckpoint()
-    val ids = releasableFor(s)
-    (s.sparkContext.getPersistentRDDs.keySet -- before)
-      .foreach(id => ids.add(id))
+    State.releasable(s, s.sparkContext.getPersistentRDDs.keySet -- before)
     caches.foreach(_.unpersist())
     r
   }
-
-  /** RDD ids whose blocks must SURVIVE [[releaseStrays]]: everything a
-    * [[memo]] entry pinned (the memoized frame itself plus any checkpoint
-    * its compute created internally — a memoized frame is a truncated-
-    * lineage localCheckpoint, so dropping its blocks would make every
-    * later dashboard reuse fail, not recompute). Bounded by the memo set
-    * (~15 small frames). */
-  private val protectedIds =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.Set[Int]]()
-
-  private def protectedFor(s: org.apache.spark.sql.SparkSession)
-      : java.util.Set[Int] = protectedIds.synchronized {
-    var ids = protectedIds.get(s)
-    if (ids == null) {
-      ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      protectedIds.put(s, ids)
-    }
-    ids
-  }
-
-  /** RDD ids [[releaseStrays]] MAY drop: exactly the checkpoints
-    * [[materializeAndRelease]] pinned. Everything else the session holds
-    * persisted — plain caches (clearCache's job), streaming-pinned
-    * frames, a user's own localCheckpoints — is never touched, because a
-    * truncated-lineage block that drops while a consumer still holds the
-    * frame fails with a missing-block error rather than recomputing
-    * (r15 ADVICE). */
-  private val releasableIds =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.Set[Int]]()
-
-  private def releasableFor(s: org.apache.spark.sql.SparkSession)
-      : java.util.Set[Int] = releasableIds.synchronized {
-    var ids = releasableIds.get(s)
-    if (ids == null) {
-      ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-      releasableIds.put(s, ids)
-    }
-    ids
-  }
-
-  /** Release the localCheckpoint blocks [[materializeAndRelease]] pinned
-    * for PREVIOUS queries (minus the memo-protected set): checkpointed
-    * frames are invisible to the CacheManager, so `clearCache()` never
-    * frees them and they accumulate across a 200-query session. Session
-    * hygiene at measured ≈zero cost — NOT a performance fix: the round-15
-    * controlled A/B (BENCH.md round 15) acquitted pinned stray blocks as
-    * the r14 pair-family regression's mechanism (the keep-strays control
-    * arm actually ran FASTER than the release arms, within weather; the
-    * regression was sustained machine load). Kept wired into
-    * [[graft.SparkEntry]]'s `fresh` because unbounded pinned-block growth
-    * is still a leak.
-    *
-    * SINGLE-CONSUMER CONTRACT (r15 ADVICE): constructing a registry query
-    * invalidates every EARLIER registry query's materialized result —
-    * their truncated-lineage blocks drop and cannot recompute. Callers
-    * holding multiple query results concurrently must copy
-    * ([[DataFrame.collect]] / write) before constructing the next query. */
-  def releaseStrays(s: org.apache.spark.sql.SparkSession): Unit = {
-    val keep = protectedFor(s)
-    val releasable = releasableFor(s)
-    val persisted = s.sparkContext.getPersistentRDDs
-    val it = releasable.iterator()
-    while (it.hasNext) {
-      val id = it.next()
-      if (!keep.contains(id)) {
-        persisted.get(id).foreach(_.unpersist(blocking = false))
-        it.remove()
-      }
-    }
-  }
-
-  /** Session-scoped memo of EXPENSIVE GROUND-TRUTH frames the recall
-    * dashboards embed (brute-force top-k, the exact prefix-join pair
-    * set): within one session a user — and the bench — runs the member
-    * query AND the dashboards that grade against it, and recomputing the
-    * identical deterministic frame per consumer is pure waste (r13
-    * verdict #1b). Only localCheckpointed, small-by-construction results
-    * may be memoized (pair sets ∝ k·queries or duplicate density). Keyed
-    * by (session, operator, dir); entries die with the session (weak
-    * keys on the SparkSession). Thread-safe via computeIfAbsent. */
-  private val memoTable =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
   /** Eagerly pin `f` and, when its ACTUAL stored size clears the session's
     * auto-broadcast threshold, return it broadcast-hinted.
@@ -138,14 +54,12 @@ object Caching {
     * frame (an open-domain trigram table at 100 TB) exceeds the threshold
     * and is NOT hinted, keeping the shuffled join. The deserialized
     * stored size over-estimates the serialized broadcast payload, so the
-    * comparison errs toward not broadcasting. `ids` collects the pinned
-    * RDD ids (same snapshot-diff bookkeeping as the callers). */
-  private def pinSized(f: DataFrame, ids: java.util.Set[Int]): DataFrame = {
+    * comparison errs toward not broadcasting. */
+  private def pinSized(f: DataFrame): DataFrame = {
     val s = f.sparkSession
     val before = s.sparkContext.getPersistentRDDs.keySet
     val cp = f.localCheckpoint()
     val newIds = s.sparkContext.getPersistentRDDs.keySet -- before
-    newIds.foreach(id => ids.add(id))
     val bytes = s.sparkContext.getRDDStorageInfo
       .filter(i => newIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
     // the session's already-parsed threshold; negative disables broadcast
@@ -155,74 +69,37 @@ object Caching {
     else cp
   }
 
-  def memo(s: org.apache.spark.sql.SparkSession, key: String)(
-      compute: => DataFrame): DataFrame = {
-    val perSession = memoTable.synchronized {
-      var m = memoTable.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        memoTable.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(key, _ => {
-      // snapshot-diff the persisted-RDD set around the compute so the
-      // memoized checkpoint (and anything it pinned internally) survives
-      // releaseStrays — over-protecting a compute-internal stray is
-      // bounded by the memo count and beats breaking a truncated-lineage
-      // frame the dashboards will reuse
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      val computed = compute
-      val ids = protectedFor(s)
-      val f = pinSized(computed, ids)
-      (s.sparkContext.getPersistentRDDs.keySet -- before)
-        .foreach(id => ids.add(id))
-      f
-    })
-  }
+  /** Session-scoped memo of EXPENSIVE GROUND-TRUTH frames the recall
+    * dashboards embed (brute-force top-k, the exact prefix-join pair
+    * set): within one session a user — and the bench — runs the member
+    * query AND the dashboards that grade against it, and recomputing the
+    * identical deterministic frame per consumer is pure waste (r13
+    * verdict #1b). The one-frame case of [[memoGroup]]. */
+  def memo(s: SparkSession, key: String)(compute: => DataFrame): DataFrame =
+    memoGroup(s, key)((Seq(compute), Nil)).head
 
-  /** [[memo]] for a FAMILY of frames computed by one cold fit — the
-    * shape of a frozen model: [[graft.ops.TermScoring.LmModel]]'s six
-    * count frames all derive from one pass over the train split, so
-    * memoizing them under six independent keys would re-run that pass
-    * per frame. The closure returns (frames, upstreamCaches): every
-    * frame is localCheckpointed and memo-PROTECTED (same lifecycle as
-    * [[memo]] — dashboards and repeat queries reuse the pinned blocks,
-    * [[releaseStrays]] never drops them, entries die with the session),
-    * then the upstream caches the fit scanned are released, like
-    * [[materializeAndRelease]]. Same small-by-construction contract:
-    * model/count frames bounded by vocabulary, never corpus-sized
-    * per-doc frames. */
-  def memoGroup(s: org.apache.spark.sql.SparkSession, key: String)(
-      compute: => (Seq[DataFrame], Seq[DataFrame])): Seq[DataFrame] = {
-    val perSession = memoGroupTable.synchronized {
-      var m = memoGroupTable.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
-        memoGroupTable.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(key, _ => {
-      val before = s.sparkContext.getPersistentRDDs.keySet
+  /** Memo for a FAMILY of frames computed by one cold fit — the shape of
+    * a frozen model: [[graft.ops.TermScoring.LmModel]]'s six count frames
+    * all derive from one pass over the train split, so memoizing them
+    * under six independent keys would re-run that pass per frame. The
+    * closure returns (frames, upstreamCaches): every frame is
+    * localCheckpointed (broadcast-hinted by its actual size, see
+    * [[pinSized]]) and pinned in [[graft.State]] under `key` — dashboards
+    * and repeat queries reuse the pinned blocks, releaseStrays never drops
+    * them, entries die with the session — then the upstream caches the
+    * fit scanned are released, like [[materializeAndRelease]]. Only
+    * small-by-construction frames may be memoized: pair sets ∝ k·queries
+    * or duplicate density, model/count frames bounded by vocabulary,
+    * never corpus-sized per-doc frames. */
+  def memoGroup(s: SparkSession, key: String)(
+      compute: => (Seq[DataFrame], Seq[DataFrame])): Seq[DataFrame] =
+    State.pinned(s, key) {
       val (frames, caches) = compute
-      val ids = protectedFor(s)
-      // pinSized: eager checkpoint + broadcast hint iff the frame's
-      // ACTUAL stored bytes clear the auto-broadcast threshold (see its
-      // scaladoc — restores the size-aware join choice a checkpoint's
-      // estimate-stats would otherwise lose at replica scale)
-      val cps = frames.map(f => pinSized(f, ids))
-      (s.sparkContext.getPersistentRDDs.keySet -- before)
-        .foreach(id => ids.add(id))
+      val cps = frames.map(pinSized)
       // the upstream caches drop now — the checkpoints above are
-      // self-contained (their snapshot-diff-protected ids may include
-      // the just-unpersisted cache ids; protecting a dead id is a no-op)
+      // self-contained (the pinned ids may include the just-unpersisted
+      // cache ids; protecting a dead id is a no-op)
       caches.foreach(_.unpersist())
       cps
-    })
-  }
-
-  private val memoGroupTable =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]]()
+    }
 }

@@ -111,24 +111,18 @@ object CollabEvents {
   /** Persisted trained-model artifact (the MODEL twin of the standing
     * indexes — [[graft.sources.IndexStore]]'s discipline applied to
     * [[graft.collab.Training.save]]): train + save ONCE per (application,
-    * corpus); every subsequent scoring job loads the frozen factor
-    * matrices from parquet. This is the one reference behavior (model
-    * reuse — the reference keeps its MatrixFactorizationModel in memory
-    * across predict calls) a real pipeline does via storage. */
-  private val savedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * corpus) through [[graft.State.built]]; every subsequent scoring job
+    * loads the frozen factor matrices from parquet. This is the one
+    * reference behavior (model reuse — the reference keeps its
+    * MatrixFactorizationModel in memory across predict calls) a real
+    * pipeline does via storage. */
   private def standingModelPath(s: SparkSession, dir: String): String =
-    savedModels.computeIfAbsent(dir, _ => {
-      val ratings = ratingsFromEvents(s, dir)
-      val train = ratings.filter(pmod(col("event_id"), lit(10)) < 8)
+    graft.State.built(s, "model", dir) { p =>
+      val train = ratingsFromEvents(s, dir)
+        .filter(pmod(col("event_id"), lit(10)) < 8)
         .select("user", "product", "rating")
-      val p = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_model_${s.sparkContext.applicationId}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
       Training.save(Training.train(train, maxIter = 10), p)
-      p
-    })
+    }
 
   /** Saved-model root of the LAST [[alsScoreFromSaved]] run — the oracle
     * reads the factor parquet directly (stash-then-generate: Verify dumps

@@ -5,70 +5,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Loaders for the harness testdata (TESTDATA.md). One parquet per table;
   * reads are vectorized + column-pruned by Catalyst.
   *
-  * Schema inference is cached per (session, path) — r16 optimization:
-  * every `spark.read.parquet` launches a footer-read job to infer the
-  * schema, and a 212-query bench session constructs each query 2–3 times,
-  * so the SAME static file's footer was read hundreds of times (~50–80 ms
-  * of job + driver latency per construction, visible as `parquet at
-  * Tables.scala` jobs in every per-job trace, OPTIMIZATION_r16.md §3).
-  * The cache holds only METADATA (a StructType — what a catalog/metastore
-  * provides in a real deployment); the data is re-read from parquet by
-  * every invocation, so nothing computed is cached across runs. Keyed
-  * weakly by session (dies with it); safe because a path's schema cannot
-  * change under a session — specs always write fresh temp dirs, appends
-  * don't alter schemas. */
+  * Schema inference is cached per (session, path) in [[graft.State]] —
+  * r16 optimization: every `spark.read.parquet` launches a footer-read job
+  * to infer the schema, and a 212-query bench session constructs each
+  * query 2–3 times, so the SAME static file's footer was read hundreds of
+  * times (~50–80 ms of job + driver latency per construction, visible as
+  * `parquet at Tables.scala` jobs in every per-job trace,
+  * OPTIMIZATION_r16.md §3). The cache holds only METADATA (a StructType —
+  * what a catalog/metastore provides in a real deployment); the data is
+  * re-read from parquet by every invocation. A writer that may change a
+  * path's schema drops the entry with [[graft.State.invalidate]]. */
 object Tables {
-  private val schemaCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String,
-        org.apache.spark.sql.types.StructType]]()
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     readCached(spark, s"$dir/$name.parquet")
 
-  /** Schema-cached parquet read of any static-schema path — also used by
-    * [[graft.sources.IndexStore]] for the standing-artifact tables (their
-    * builders are fixed code, so a rebuild/append at the same path always
-    * writes the same schema; only the DATA changes, and the data is
-    * re-read per invocation). */
-  def readCached(spark: SparkSession, p: String): DataFrame = {
-    val perSession = schemaCache.synchronized {
-      var m = schemaCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String,
-          org.apache.spark.sql.types.StructType]()
-        schemaCache.put(spark, m)
-      }
-      m
-    }
-    val sch = perSession.computeIfAbsent(p,
-      _ => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(p)
-  }
-
-  /** Drop cached schemas for `root` and every path under it (`root/…`;
-    * a sibling that merely shares the string prefix, `root2`, keeps its
-    * entry) — the guard the cache's "a path's schema cannot change under
-    * a session" assumption needs on the one class of writers that CAN
-    * change it: artifact REBUILD paths (r16 verdict #8). Every
-    * [[graft.sources.IndexStore]] overwrite-mode builder calls this after
-    * writing, so an in-session rebuild that evolves a schema is re-read
-    * correctly instead of through a stale StructType. Appends stay
-    * uncovered by design: they run the same fixed builder projection, so
-    * the schema is unchanged — busting them would re-introduce the
-    * per-micro-batch footer-read job this cache removed. */
-  def bustSchema(spark: SparkSession, root: String): Unit =
-    schemaCache.synchronized {
-      val m = schemaCache.get(spark)
-      if (m != null) {
-        val under = root.stripSuffix("/") + "/"
-        val it = m.keySet.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (p == root || p.startsWith(under)) it.remove()
-        }
-      }
-    }
+  /** Schema-cached parquet read of any path — also used by
+    * [[graft.sources.IndexStore]] for the standing-artifact tables, whose
+    * writers invalidate what they write. */
+  def readCached(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(
+      graft.State.schema(spark, p)(spark.read.parquet(p).schema)).parquet(p)
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

@@ -261,20 +261,20 @@ object Upsert {
     * untouched by the change, delta appended as its own table, the
     * Hudi/Iceberg MOR layout in miniature), then [[readView]] reconciles
     * at scan time. Oracle = q_upsert's SQL verbatim: the two variants must
-    * be indistinguishable to a reader. */
+    * be indistinguishable to a reader. The store is written once per
+    * (application, sf dir) by [[graft.State.built]] — the returned view
+    * reads it lazily, so it lives with the application — and a fresh
+    * store instance reads it back through its schema sidecars. */
   def documentsUpsertMor(s: SparkSession, dir: String): DataFrame = {
-    val (snapshot, changes) = changesetOf(Tables.documents(s, dir))
-    // unique per application: a fixed path races concurrent harness runs
-    // on one machine (create() would delete the directory out from under
-    // the other run's scan); the returned view reads the store lazily, so
-    // the directory must outlive this call — it lives with the app
-    val root = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft_mor_store_${s.sparkContext.applicationId}"
+    val root = graft.State.built(s, "mor_store", dir) { root =>
+      val (snapshot, changes) = changesetOf(Tables.documents(s, dir))
+      val store = new graft.collab.ParquetTableStore(s, root)
+      store.create("base", snapshot.schema)
+      store.append("base", snapshot)
+      store.create("delta", changes.schema)
+      store.append("delta", changes)
+    }
     val store = new graft.collab.ParquetTableStore(s, root)
-    store.create("base", org.apache.spark.sql.types.StructType(snapshot.schema.fields))
-    store.append("base", snapshot)
-    store.create("delta", org.apache.spark.sql.types.StructType(changes.schema.fields))
-    store.append("delta", changes)
     readView(store.scan("base"), Seq(store.scan("delta")), "doc_id", "text")
       .select(col("doc_id"), col("status"),
         length(col("text")).as("n_chars_new"))

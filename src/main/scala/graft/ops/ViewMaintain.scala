@@ -46,23 +46,16 @@ object ViewMaintain {
         (coalesce(col("s0"), lit(0L)) + coalesce(col("s1"), lit(0L)))
           .as("sum_micro"))
 
-  private val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The standing view: stats over the base batch (event_id % 10 <> 9),
-    * materialized once per (application, sf dir). At scale this table
-    * already exists — timing its construction per-query would
-    * misrepresent the mechanism (same memoization rationale as
-    * [[graft.sources.ZoneMaps]]' clustered fixture). */
+    * materialized once per (application, sf dir) by
+    * [[graft.State.built]]. At scale this table already exists — timing
+    * its construction per-query would misrepresent the mechanism (same
+    * memoization rationale as [[graft.sources.ZoneMaps]]' clustered
+    * fixture). */
   private def storedView(s: SparkSession, dir: String): String =
-    fixtures.computeIfAbsent(dir, _ => {
-      val root = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_aggview_${s.sparkContext.applicationId}_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+    graft.State.built(s, "aggview", dir)(
       statsOf(Tables.events(s, dir).filter(col("event_id") % 10 =!= 9))
-        .write.mode("overwrite").parquet(root)
-      root
-    })
+        .write.mode("overwrite").parquet(_))
 
   /** q_incr_agg: stored view ⊕ delta batch (event_id % 10 == 9) — must
     * equal the from-scratch aggregate over ALL events. */

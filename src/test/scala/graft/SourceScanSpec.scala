@@ -6,7 +6,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-level rules for `src/main`: every entry point gets its session
-  * from [[Session]], and the only env knobs are the declared contract. */
+  * from [[Session]], the only env knobs are the declared contract, and
+  * session- or application-keyed state lives only in [[State]]. */
 class SourceScanSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -34,5 +35,15 @@ class SourceScanSpec extends AnyFunSuite {
         .filterNot(contract).map(k => s"${main.relativize(p)}: SPARK_GRAFT_$k")
     }
     assert(knobs === Nil)
+  }
+
+  test("src/main keys state on sessions, temp paths or application ids " +
+      "only in the State registry") {
+    val sites = sources.flatMap { case (p, src) =>
+      Seq("WeakHashMap", "java.io.tmpdir", "applicationId")
+        .filter(src.contains).map(w => s"${main.relativize(p)}: $w")
+    }
+    assert(sites.forall(_.startsWith("graft/State.scala: ")), sites)
+    assert(sites.nonEmpty, "the registry itself must be found")
   }
 }

@@ -142,7 +142,7 @@ class AudioDedupSpec extends SparkSpec {
     assert(graft.sources.IndexStore.standingAudioSigIndex(spark, dir)
       .count() > 0)
     val direct = graft.sources.IndexStore.readAudioSig(spark,
-      graft.sources.IndexStore.rootFor(spark, "audiosig", dir))
+      graft.sources.IndexStore.audioSigRoot(spark, dir))
     assert(direct.inputFiles.nonEmpty)
     assert(!direct.inputFiles.exists(_.contains("documents.parquet")),
       "the standing corpus must never be rescanned through the index")

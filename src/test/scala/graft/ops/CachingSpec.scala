@@ -34,7 +34,7 @@ class CachingSpec extends SparkSpec {
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     assert(persistedBefore > 0, "checkpoints must be pinned before release")
 
-    Caching.releaseStrays(spark)
+    graft.State.releaseStrays(spark)
 
     assert(spark.sparkContext.getPersistentRDDs.size < persistedBefore,
       "stray blocks must be released")
@@ -58,7 +58,7 @@ class CachingSpec extends SparkSpec {
     Caching.materializeAndRelease(
       Seq((3L, "c")).toDF("id", "v")).count()
 
-    Caching.releaseStrays(spark)
+    graft.State.releaseStrays(spark)
 
     // the untracked checkpoint's blocks survive: a truncated-lineage
     // frame cannot recompute, so this read would throw on a missing

@@ -983,7 +983,7 @@ class TextMultimodalSpec extends SparkSpec {
     assert(graft.sources.IndexStore.standingPhashIndex(spark, dir)
       .count() > 0)
     val direct = graft.sources.IndexStore.readPhash(spark,
-      graft.sources.IndexStore.rootFor(spark, "phash", dir))
+      graft.sources.IndexStore.phashRoot(spark, dir))
     assert(direct.inputFiles.nonEmpty)
     assert(!direct.inputFiles.exists(_.contains("documents.parquet")),
       "the standing corpus must never be rescanned through the index")

@@ -24,7 +24,7 @@ class SchemaCacheSpec extends SparkSpec {
     // the cached StructType would hide the new column (or crash the scan)
     Seq((2L, "b", 7.5)).toDF("id", "s", "x")
       .write.mode("overwrite").parquet(tmp)
-    Tables.bustSchema(spark, tmp)
+    graft.State.invalidate(spark, tmp)
     val again = Tables.readCached(spark, tmp)
     assert(again.columns.toSeq === Seq("id", "s", "x"))
     val row = again.collect()(0)
@@ -59,7 +59,7 @@ class SchemaCacheSpec extends SparkSpec {
       Seq((2L, "b", 7.5)).toDF("id", "s", "x")
         .write.mode("overwrite").parquet(p)
     }
-    Tables.bustSchema(spark, s"$root/idx")
+    graft.State.invalidate(spark, s"$root/idx")
     assert(Tables.readCached(spark, s"$root/idx/t").columns.toSeq ===
       Seq("id", "s", "x"), "a path under the busted root must be re-read")
     assert(Tables.readCached(spark, s"$root/idx2").columns.toSeq ===
@@ -79,7 +79,7 @@ class SchemaCacheSpec extends SparkSpec {
     // prime the cache with FOREIGN schemas at both rebuilt paths
     for (t <- Seq("freq", "prefixes")) {
       Seq((1, 2)).toDF("a", "b").write.mode("overwrite").parquet(s"$root/$t")
-      Tables.bustSchema(spark, s"$root/$t")
+      graft.State.invalidate(spark, s"$root/$t")
       assert(Tables.readCached(spark, s"$root/$t").columns.toSeq ===
         Seq("a", "b"))
     }

@@ -151,4 +151,35 @@ class IndexStoreSpec extends SparkSpec {
     assert(docScans === 1,
       s"expected 1 documents scan (delta only), found $docScans")
   }
+
+  test("an in-session appendDedup on the standing index's own root is " +
+      "seen by the next standingDedupIndex, and the stale resident copy's " +
+      "blocks are released") {
+    // a private corpus dir, so the shared sf0.001 standing index stays
+    // untouched for the other specs
+    val corpus = tmp("idx-resident")
+    Tables.documents(spark, dir).write.parquet(s"$corpus/documents.parquet")
+    val persisted = () => spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted()
+    val first = IndexStore.standingDedupIndex(spark, corpus)
+    val firstDigests = sortedRows(first.digests)
+    val residentIds = persisted() -- before
+    assert(residentIds.nonEmpty, "the resident copy must pin blocks")
+
+    val added = Tables.documents(spark, dir).filter(col("doc_id") % 7 === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(lit("appended "), col("text")).as("text"))
+    val appended = IndexStore.appendDedup(added,
+      IndexStore.dedupRoot(spark, corpus))
+    val newDigests = sortedRows(appended.digests)
+    assert(newDigests.nonEmpty)
+
+    val second = sortedRows(
+      IndexStore.standingDedupIndex(spark, corpus).digests)
+    assert(second === (firstDigests ++ newDigests).sorted,
+      "the second call must return the appended digests")
+    assert((residentIds & persisted()).isEmpty,
+      "the dropped resident copy's blocks must be unpersisted")
+    graft.State.invalidate(spark, IndexStore.dedupRoot(spark, corpus))
+  }
 }
