@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: payload bytes never shuffle — signatures are extracted
   * in one narrow mapPartitions pass and only (asset_id, 16 longs, 16
   * ints, 48-char key) flows downstream; the persisted signature index
-  * ([[graft.sources.IndexStore.buildAudioSig]]) means standing audio is
+  * ([[graft.sources.IndexStore.writeAudioSig]]) means standing audio is
   * decoded once, at index time.
   */
 object AudioDedup {

@@ -340,8 +340,8 @@ object Multimodal {
     * numeric pack would drag across the engine boundary, and hash-joins
     * on it just as well. This is the unit the in-query operators compute
     * and the persisted phash index stores ([[graft.sources.IndexStore
-    * .buildPhash]]) — nothing is fitted, so build, append, and in-query
-    * recompute all produce the same signature for an asset. */
+    * .writePhash]]) — nothing is fitted, so every index write and the
+    * in-query recompute produce the same signature for an asset. */
   private[graft] def phashOf(assets: Dataset[Asset]): DataFrame =
     extractFeatures(assets).toDF()
       .withColumn("f", expr("cast(features AS ARRAY<DOUBLE>)"))

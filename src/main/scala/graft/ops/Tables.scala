@@ -26,6 +26,19 @@ object Tables {
     spark.read.schema(
       graft.State.schema(spark, p)(spark.read.parquet(p).schema)).parquet(p)
 
+  /** Ids of the `<key>=<id>` subdirectories of `dir`, sorted; empty when
+    * `dir` does not exist — the committed versions of a versioned view
+    * (`v=`, [[ViewMaintain]]) and the batch segments of an index table's
+    * `_delta` (`b=`, [[graft.sources.IndexStore]]). */
+  def versions(s: SparkSession, dir: String, key: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$key=")).map(_.stripPrefix(s"$key=").toLong)
+      .sorted
+  }
+
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

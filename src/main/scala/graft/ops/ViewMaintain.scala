@@ -68,25 +68,13 @@ object ViewMaintain {
 
   // --- versioned view store (the streaming sink's exactly-once flip) -------
 
-  /** List the committed view versions under `root` (subdirs `v=<id>`). */
-  def viewVersions(s: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .sorted
-  }
-
   /** Read the newest committed view strictly OLDER than `beforeId`
     * (empty view if none) — the replay-safe read: a half-written or
     * fully-written version of the CURRENT batch is never an input to its
     * own re-run. */
   def readViewBefore(s: SparkSession, root: String,
       beforeId: Long): DataFrame =
-    viewVersions(s, root).filter(_ < beforeId).lastOption match {
+    Tables.versions(s, root, "v").filter(_ < beforeId).lastOption match {
       case Some(v) => s.read.parquet(s"$root/v=$v")
       case None =>
         import org.apache.spark.sql.types._
@@ -118,7 +106,7 @@ object ViewMaintain {
   def compactViews(s: SparkSession, root: String, keep: Int = 2): Unit = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    viewVersions(s, root).dropRight(keep).foreach { v =>
+    Tables.versions(s, root, "v").dropRight(keep).foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/v=$v"), true)
     }
   }

@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.State
-import graft.ops.{Dedup, Tables, TextAnalysis}
+import graft.ops.{Asset, AudioDedup, Dedup, Multimodal, Similarity, Tables,
+  TextAnalysis}
 
 /** Persisted standing indexes for the incremental intake operators — the
   * piece that turns "at scale the standing index is precomputed" from a
@@ -12,21 +13,32 @@ import graft.ops.{Dedup, Tables, TextAnalysis}
   *
   * An intake pipeline answers "is this delta batch novel?" millions of
   * times against a corpus it must never rescan. The probe structures the
-  * incremental operators need are all derived, append-only tables:
+  * incremental operators need are all derived tables whose every row is a
+  * pure function of ONE document, vector or asset:
   *
-  *   - winnow fingerprint index: (doc_id, fp) — exactly
+  *   - winnow fingerprints (doc_id, fp) — exactly
   *     [[graft.ops.TextAnalysis.winnow]]'s output
-  *   - dedup index: content digests (doc_id, fp), MinHash LSH bands
+  *   - dedup: content digests (doc_id, fp), MinHash LSH bands
   *     (doc_id, band, key), and shingle sets (doc_id, sh) for the exact
   *     Jaccard verify
+  *   - curation digests (fp) — the streaming front door's triage table
+  *   - prefix join: shingle-hash sets + their prefixes under a FROZEN
+  *     document-frequency dictionary (`freq`)
+  *   - wide-band vector signatures (vec_id, e, nrm, wb0..wb7)
+  *   - perceptual-hash signatures (asset_id, f, lv, k)
+  *   - audio fingerprints (asset_id, g, lv, k)
+  *   - ANN (IVF + PQ): cell-partitioned inverted lists and PQ codes under
+  *     FROZEN quantizers (`centroids`, `codebooks`)
   *
-  * Because parquet files are immutable and every row is a pure function of
-  * ONE document, maintenance after an append is itself append-only: sketch
-  * the delta docs, append the rows — the standing corpus is never read
-  * (the same delta-proportional discipline as [[ZoneMaps.update]] and
-  * merge-on-read's op log). The `append*` methods take the delta frame
-  * and return the exact frame they appended so callers (and the spec) can
-  * assert its `inputFiles` never touch the standing corpus.
+  * Each kind has one writer, `writeX(delta, root, mode)`, which lands its
+  * rows under a [[WriteMode]] and returns the frame it wrote (callers and
+  * specs assert its `inputFiles` never touch the standing corpus), and one
+  * reader, `readX(s, root, before = None)`. Because parquet files are
+  * immutable and rows are per-document, maintenance after an append is
+  * itself append-only: sketch the delta, write its rows — the standing
+  * corpus is never read (the same delta-proportional discipline as
+  * [[ZoneMaps.update]] and merge-on-read's op log). Postings segments are
+  * the one aggregated table and keep their own build/append pair.
   *
   * At 100 TB: the indexes shuffle/store hashes and 16-byte digests, never
   * text (the shingle-set table is the one text-derived column, and it is
@@ -35,29 +47,85 @@ import graft.ops.{Dedup, Tables, TextAnalysis}
   */
 object IndexStore {
 
+  // --- write modes, batch segments, reads -----------------------------------
+
+  /** How a writer lands its rows.
+    *
+    * The streaming sinks need their index writes to be REPLAYABLE: a
+    * crash-replayed micro-batch must (a) not see its own, possibly
+    * half-written, rows when it re-triages, and (b) overwrite — not
+    * re-append — its output. Plain `Append` gives neither, so a sink writes
+    * each batch's rows as `Batch(batchId)`: an overwritten
+    * `<table>/_delta/b=<batchId>` directory (the ViewMaintain
+    * versioned-flip discipline). The rows are deterministic in (delta,
+    * batchId), so a replay rewrites identical bytes instead of appending a
+    * duplicate segment; and a read bounded by `before = Some(batchId)`
+    * sees the standing table plus segments with id STRICTLY below it —
+    * exactly the state batch N saw the first time, whether or not its own
+    * `b=N` segment landed. The `_delta` subtree is invisible to plain
+    * readers of the table — Spark's file listing skips underscore-prefixed
+    * paths — so `before = None` reads stay the batch queries' layout and
+    * plans; [[foldDeltas]] retires segments into the standing table. */
+  sealed trait WriteMode
+  object WriteMode {
+    /** Overwrite: index the given rows from scratch. */
+    case object Build extends WriteMode
+    /** Add the delta's rows to the standing table — O(delta). */
+    case object Append extends WriteMode
+    /** Overwrite the batch-keyed segment `<table>/_delta/b=<id>`. */
+    final case class Batch(id: Long) extends WriteMode
+  }
+  import WriteMode.{Append, Batch, Build}
+
+  private def segment(path: String, id: Long): String = s"$path/_delta/b=$id"
+
+  private def segmentIds(s: SparkSession, path: String): Seq[Long] =
+    Tables.versions(s, s"$path/_delta", "b")
+
+  /** Write `df` as table `path` under `mode` and return it. A segment is
+    * flat; `partitionBy` applies to the standing table. The write ends
+    * with a [[graft.State.invalidate]] of what it wrote, so no cached
+    * schema or resident copy outlives the files it was read from. */
+  private def put(df: DataFrame, path: String, mode: WriteMode,
+      partitionBy: Seq[String] = Nil): DataFrame = {
+    val (target, save, parts) = mode match {
+      case Batch(id) => (segment(path, id), "overwrite", Nil)
+      case Build => (path, "overwrite", partitionBy)
+      case Append => (path, "append", partitionBy)
+    }
+    val w = if (parts.isEmpty) df.write else df.write.partitionBy(parts: _*)
+    w.mode(save).parquet(target)
+    State.invalidate(df.sparkSession, target)
+    df
+  }
+
+  /** A writer of several tables under `root` ends here: a Build or Append
+    * also drops what is cached for the root itself (the resident copy of a
+    * standing index is keyed by its root); a Batch leaves the standing
+    * tables as they were. */
+  private def landed(s: SparkSession, root: String, mode: WriteMode): Unit =
+    if (!mode.isInstanceOf[Batch]) State.invalidate(s, root)
+
+  /** Table `path` as the read at micro-batch `before` must see it: `None`
+    * is the standing table alone — `Tables.readCached`, no `_delta`
+    * listing; `Some(id)` adds every segment with id < `id`. */
+  private def table(s: SparkSession, path: String,
+      before: Option[Long]): DataFrame = {
+    val standing = Tables.readCached(s, path)
+    val segs = before.toSeq.flatMap(b => segmentIds(s, path).filter(_ < b))
+    if (segs.isEmpty) standing
+    else standing.unionByName(s.read.parquet(segs.map(segment(path, _)): _*))
+  }
+
   // --- winnow fingerprint index ---------------------------------------------
 
-  /** Sketch `docs` and write a fresh fingerprint index at `path`.
-    * (Every writer here — build, append, rebuild, compact, fold — ends
-    * with a [[graft.State.invalidate]] of what it wrote, so no cached
-    * schema or resident copy outlives the files it was read from.) */
-  def buildWinnow(docs: DataFrame, path: String, w: Int = 4): Unit = {
-    TextAnalysis.winnowWindowedOf(docs, w)
-      .write.mode("overwrite").parquet(path)
-    State.invalidate(docs.sparkSession, path)
-  }
+  def writeWinnow(docs: DataFrame, path: String, mode: WriteMode,
+      w: Int = 4): DataFrame =
+    put(TextAnalysis.winnowWindowedOf(docs, w), path, mode)
 
-  /** Append ONLY the delta docs' fingerprints — O(delta); the standing
-    * corpus is not an input. Returns the appended frame. */
-  def appendWinnow(deltaDocs: DataFrame, path: String, w: Int = 4): DataFrame = {
-    val sketch = TextAnalysis.winnowWindowedOf(deltaDocs, w)
-    sketch.write.mode("append").parquet(path)
-    State.invalidate(deltaDocs.sparkSession, path)
-    sketch
-  }
-
-  def readWinnow(s: SparkSession, path: String): DataFrame =
-    graft.ops.Tables.readCached(s, path).select(col("doc_id"), col("fp"))
+  def readWinnow(s: SparkSession, path: String,
+      before: Option[Long] = None): DataFrame =
+    table(s, path, before).select(col("doc_id"), col("fp"))
 
   // --- dedup (digest + band + shingle) index --------------------------------
 
@@ -79,34 +147,24 @@ object IndexStore {
       shingles = sh.select(col("doc_id"), col("sh")))
   }
 
-  /** Index `docs` from scratch at `root` (three parquet tables). */
-  def buildDedup(docs: DataFrame, root: String): Unit = {
+  /** Write `docs`' rows to all three tables under `root`. */
+  def writeDedup(docs: DataFrame, root: String,
+      mode: WriteMode): DedupIndex = {
     val d = docs.cache(); d.count() // three derivations of one scan
     val parts = dedupParts(d)
-    parts.digests.write.mode("overwrite").parquet(s"$root/digests")
-    parts.bands.write.mode("overwrite").parquet(s"$root/bands")
-    parts.shingles.write.mode("overwrite").parquet(s"$root/shingles")
+    put(parts.digests, s"$root/digests", mode)
+    put(parts.bands, s"$root/bands", mode)
+    put(parts.shingles, s"$root/shingles", mode)
     d.unpersist()
-    State.invalidate(docs.sparkSession, root)
-  }
-
-  /** Append ONLY the delta docs' rows to all three tables — O(delta).
-    * Returns the appended frames for input-file assertions. */
-  def appendDedup(deltaDocs: DataFrame, root: String): DedupIndex = {
-    val d = deltaDocs.cache(); d.count()
-    val parts = dedupParts(d)
-    parts.digests.write.mode("append").parquet(s"$root/digests")
-    parts.bands.write.mode("append").parquet(s"$root/bands")
-    parts.shingles.write.mode("append").parquet(s"$root/shingles")
-    d.unpersist()
-    State.invalidate(deltaDocs.sparkSession, root)
+    landed(docs.sparkSession, root, mode)
     parts
   }
 
-  def readDedup(s: SparkSession, root: String): DedupIndex = DedupIndex(
-    digests = graft.ops.Tables.readCached(s, s"$root/digests"),
-    bands = graft.ops.Tables.readCached(s, s"$root/bands"),
-    shingles = graft.ops.Tables.readCached(s, s"$root/shingles"))
+  def readDedup(s: SparkSession, root: String,
+      before: Option[Long] = None): DedupIndex = DedupIndex(
+    digests = table(s, s"$root/digests", before),
+    bands = table(s, s"$root/bands", before),
+    shingles = table(s, s"$root/shingles", before))
 
   // --- inverted-index (postings) segments -----------------------------------
 
@@ -168,97 +226,15 @@ object IndexStore {
 
   /** Per-doc [[graft.ops.Redaction.curationFp]] digests — what the
     * streaming curation front door triages against. Stored per doc (not
-    * distinct) so appends stay pure per-row functions; readers distinct. */
-  private def curationDigestsOf(docs: DataFrame): DataFrame =
-    docs.select(graft.ops.Redaction.curationFp(col("text")).as("fp"))
+    * distinct) so writes stay pure per-row functions; readers distinct. */
+  def writeCurationDigests(docs: DataFrame, path: String,
+      mode: WriteMode): DataFrame =
+    put(docs.select(graft.ops.Redaction.curationFp(col("text")).as("fp")),
+      path, mode)
 
-  def buildCurationDigests(docs: DataFrame, path: String): Unit = {
-    curationDigestsOf(docs).write.mode("overwrite").parquet(path)
-    State.invalidate(docs.sparkSession, path)
-  }
-
-  /** Append ONLY the delta docs' digests — O(delta). Returns the appended
-    * frame for input-file assertions. */
-  def appendCurationDigests(deltaDocs: DataFrame, path: String): DataFrame = {
-    val d = curationDigestsOf(deltaDocs)
-    d.write.mode("append").parquet(path)
-    State.invalidate(deltaDocs.sparkSession, path)
-    d
-  }
-
-  def readCurationDigests(s: SparkSession, path: String): DataFrame =
-    graft.ops.Tables.readCached(s, path)
-
-  // --- batch-keyed delta segments (streaming exactly-once) ------------------
-  //
-  // The streaming sinks need their index appends to be REPLAYABLE: a
-  // crash-replayed micro-batch must (a) not see its own, possibly
-  // half-written, segment when it re-triages, and (b) overwrite — not
-  // re-append — its output. Plain `mode("append")` gives neither, so the
-  // sinks write each batch's rows as an overwritten `_delta/b=<batchId>`
-  // directory (the ViewMaintain versioned-flip discipline). The `_delta`
-  // subtree is invisible to plain readers of the root — Spark's file
-  // listing skips underscore-prefixed paths — so the batch-query layout
-  // and its oracles are untouched.
-
-  /** Overwrite `df` as the batch-keyed segment `root/_delta/b=<batchId>`:
-    * deterministic in (df, batchId), so a crash-replay rewrites identical
-    * bytes instead of appending a duplicate segment. */
-  def writeDeltaSegment(df: DataFrame, root: String, batchId: Long): Unit = {
-    df.write.mode("overwrite").parquet(s"$root/_delta/b=$batchId")
-    State.invalidate(df.sparkSession, s"$root/_delta/b=$batchId")
-  }
-
-  /** Segment ids present under `root/_delta`, sorted. */
-  def deltaSegmentIds(s: SparkSession, root: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_delta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("b=")).map(_.stripPrefix("b=").toLong).sorted
-  }
-
-  /** The standing table at `root` plus every delta segment with id
-    * STRICTLY below `beforeId` — the replay-safe read: batch N re-triaging
-    * after a crash reads exactly the state batch N saw the first time,
-    * whether or not its own `b=N` segment landed. */
-  def readWithDeltasBefore(s: SparkSession, root: String,
-      beforeId: Long): DataFrame = {
-    val standing = graft.ops.Tables.readCached(s, root)
-    val segs = deltaSegmentIds(s, root).filter(_ < beforeId)
-    if (segs.isEmpty) standing
-    else standing.unionByName(
-      s.read.parquet(segs.map(v => s"$root/_delta/b=$v"): _*))
-  }
-
-  /** Batch-keyed variant of [[appendCurationDigests]] for the streaming
-    * intake sink. Returns the segment frame. */
-  def appendCurationDigestsVersioned(deltaDocs: DataFrame, path: String,
-      batchId: Long): DataFrame = {
-    val d = curationDigestsOf(deltaDocs)
-    writeDeltaSegment(d, path, batchId)
-    d
-  }
-
-  /** Batch-keyed variant of [[appendDedup]] for the streaming triage
-    * sink: one overwritten `b=<batchId>` segment per probe table. */
-  def appendDedupVersioned(deltaDocs: DataFrame, root: String,
-      batchId: Long): DedupIndex = {
-    val d = deltaDocs.cache(); d.count()
-    val parts = dedupParts(d)
-    writeDeltaSegment(parts.digests, s"$root/digests", batchId)
-    writeDeltaSegment(parts.bands, s"$root/bands", batchId)
-    writeDeltaSegment(parts.shingles, s"$root/shingles", batchId)
-    d.unpersist()
-    parts
-  }
-
-  /** Replay-safe dedup-index read for micro-batch `beforeId`. */
-  def readDedupBefore(s: SparkSession, root: String,
-      beforeId: Long): DedupIndex = DedupIndex(
-    digests = readWithDeltasBefore(s, s"$root/digests", beforeId),
-    bands = readWithDeltasBefore(s, s"$root/bands", beforeId),
-    shingles = readWithDeltasBefore(s, s"$root/shingles", beforeId))
+  def readCurationDigests(s: SparkSession, path: String,
+      before: Option[Long] = None): DataFrame =
+    table(s, path, before)
 
   // --- prefix-join (exact similarity) index ---------------------------------
 
@@ -269,84 +245,222 @@ object IndexStore {
   final case class PrefixIndex(freq: DataFrame, prefixes: DataFrame,
     sets: DataFrame)
 
-  /** Index `docs` for the exact-similarity probe at `root`. */
+  /** Index `docs` for the exact-similarity probe at `root`: fit the
+    * dictionary over their sets, then write their rows under it. */
   def buildPrefix(docs: DataFrame, root: String,
       threshold: Double = Dedup.JaccardThreshold): Unit = {
-    val sets = Dedup.prefixSetsOf(docs).cache()
-    sets.count() // three derivations of one shingle pass
-    val freq = Dedup.prefixFreqOf(sets)
-    sets.write.mode("overwrite").parquet(s"$root/sets")
-    freq.write.mode("overwrite").parquet(s"$root/freq")
-    Dedup.prefixesUnder(sets, freq, threshold)
-      .write.mode("overwrite").parquet(s"$root/prefixes")
-    sets.unpersist()
-    State.invalidate(docs.sparkSession, root)
+    prefixRows(docs, root, Build, threshold) { sets =>
+      val freq = Dedup.prefixFreqOf(sets)
+      freq.write.mode("overwrite").parquet(s"$root/freq")
+      freq
+    }
+    ()
   }
 
-  /** Append ONLY the delta docs' sets + prefixes, computed under the
-    * FROZEN stored dictionary — O(delta); the standing corpus is not an
-    * input and the dictionary is not rewritten. Safe because prefix
+  /** Write `docs`' sets + prefixes, computed under the FROZEN stored
+    * dictionary — the dictionary is not rewritten. Safe because prefix
     * correctness needs a CONSISTENT order, not a current one: stale
     * frequencies blunt candidate pruning, never recall
     * ([[graft.ops.Dedup.prefixesUnder]]); refreshing the dictionary (and
-    * re-deriving prefixes) is periodic maintenance, like compaction.
-    * Returns the appended prefix frame. */
-  def appendPrefix(deltaDocs: DataFrame, root: String,
-      threshold: Double = Dedup.JaccardThreshold): DataFrame = {
-    val s = deltaDocs.sparkSession
-    val sets = Dedup.prefixSetsOf(deltaDocs).cache()
-    sets.count()
-    val pre = Dedup.prefixesUnder(sets, graft.ops.Tables.readCached(s, s"$root/freq"),
-      threshold)
-    sets.write.mode("append").parquet(s"$root/sets")
-    pre.write.mode("append").parquet(s"$root/prefixes")
+    * re-deriving prefixes) is [[rebuildPrefix]] maintenance, like
+    * compaction. Returns the prefix frame. */
+  def writePrefix(docs: DataFrame, root: String, mode: WriteMode,
+      threshold: Double = Dedup.JaccardThreshold): DataFrame =
+    prefixRows(docs, root, mode, threshold)(_ =>
+      Tables.readCached(docs.sparkSession, s"$root/freq"))
+
+  /** Write `docs`' sets, then their prefixes under `dictionary(sets)`;
+    * returns the prefix frame. */
+  private def prefixRows(docs: DataFrame, root: String, mode: WriteMode,
+      threshold: Double)(dictionary: DataFrame => DataFrame): DataFrame = {
+    val sets = Dedup.prefixSetsOf(docs).cache()
+    sets.count() // the sets, the dictionary and the prefixes share one pass
+    put(sets, s"$root/sets", mode)
+    val pre = put(Dedup.prefixesUnder(sets, dictionary(sets), threshold),
+      s"$root/prefixes", mode)
     sets.unpersist()
-    State.invalidate(s, root)
+    landed(docs.sparkSession, root, mode)
     pre
   }
 
-  def readPrefix(s: SparkSession, root: String): PrefixIndex =
+  /** The frozen dictionary is always the standing one: no batch writes
+    * it. */
+  def readPrefix(s: SparkSession, root: String,
+      before: Option[Long] = None): PrefixIndex =
     PrefixIndex(
-      freq = graft.ops.Tables.readCached(s, s"$root/freq"),
-      prefixes = graft.ops.Tables.readCached(s, s"$root/prefixes"),
-      sets = graft.ops.Tables.readCached(s, s"$root/sets"))
+      freq = Tables.readCached(s, s"$root/freq"),
+      prefixes = table(s, s"$root/prefixes", before),
+      sets = table(s, s"$root/sets", before))
 
-  /** Batch-keyed variant of [[appendPrefix]] for the streaming
-    * exact-recall intake sink: the delta's sets + prefixes (derived under
-    * the FROZEN dictionary) land as overwritten `b=<batchId>` segments, so
-    * a crash-replayed micro-batch rewrites identical bytes. The frozen
-    * `freq` dictionary is never written by a batch — only
-    * [[rebuildPrefix]] maintenance touches it. */
-  def appendPrefixVersioned(deltaDocs: DataFrame, root: String,
-      batchId: Long, threshold: Double = Dedup.JaccardThreshold): DataFrame = {
-    val s = deltaDocs.sparkSession
-    val sets = Dedup.prefixSetsOf(deltaDocs).cache()
-    sets.count()
-    val pre = Dedup.prefixesUnder(sets, graft.ops.Tables.readCached(s, s"$root/freq"),
-      threshold)
-    writeDeltaSegment(sets, s"$root/sets", batchId)
-    writeDeltaSegment(pre, s"$root/prefixes", batchId)
-    sets.unpersist()
-    pre
+  // --- wide-band signature index (embedding near-dup intake) ----------------
+
+  /** The standing vectors' wide-band signature table
+    * (vec_id, e, nrm, wb0..wb7) — the probe side of
+    * [[graft.ops.Similarity.cosineDupIntakeIndexed]]. Unlike the ANN
+    * index there is nothing to fit: band keys come from seeded-constant
+    * planes, so every write mode and the in-query recompute produce the
+    * same signature for a vector — which is exactly why the indexed
+    * intake shares the recompute form's oracle. */
+  def writeSig(embRaw: DataFrame, path: String, mode: WriteMode): DataFrame =
+    put(Similarity.wideSigOf(embRaw), path, mode)
+
+  def readSig(s: SparkSession, path: String,
+      before: Option[Long] = None): DataFrame =
+    table(s, path, before)
+
+  // --- phash signature index (multimodal near-dup intake) -------------------
+
+  /** The standing assets' perceptual-hash signature table
+    * (asset_id, f, lv, k) — the probe side of
+    * [[graft.ops.Multimodal.mmDupIntakeIndexed]]. Like the wide-band
+    * vector index there is nothing to fit: the signature is a pure
+    * function of the decoded bytes, so every write mode and the in-query
+    * recompute produce the same row for an asset. At scale this is THE
+    * multimodal win: payload bytes are decoded once, when the asset is
+    * written, and intake probes read 16 doubles + a 48-char key per
+    * standing asset instead of re-decoding binary content. */
+  def writePhash(assets: Dataset[Asset], path: String,
+      mode: WriteMode): DataFrame =
+    put(Multimodal.phashOf(assets), path, mode)
+
+  def readPhash(s: SparkSession, path: String,
+      before: Option[Long] = None): DataFrame =
+    table(s, path, before)
+
+  // --- audio signature index (audio near-dup intake) ------------------------
+
+  /** The standing assets' audio fingerprint table (asset_id, g, lv, k) —
+    * the probe side of [[graft.ops.AudioDedup.audioDupIntakeIndexed]].
+    * Nothing is fitted (the signature is a pure function of the decoded
+    * PCM), exactly like the phash index above. Standing audio is DECODED
+    * ONCE; intake probes read 16 longs + 16 ints + a 48-char key per
+    * standing asset instead of re-reading payload bytes. */
+  def writeAudioSig(assets: Dataset[Asset], path: String,
+      mode: WriteMode): DataFrame =
+    put(AudioDedup.audioSigOf(assets), path, mode)
+
+  def readAudioSig(s: SparkSession, path: String,
+      before: Option[Long] = None): DataFrame =
+    table(s, path, before)
+
+  // --- ANN (IVF) standing index ---------------------------------------------
+
+  /** The vector twin of the prefix index: a persisted IVF structure so ANN
+    * probes never refit or re-assign the standing corpus.
+    *
+    *   - `root/centroids`: the coarse quantizer, FROZEN at build time —
+    *     (cell, centroid) — the same frozen-dictionary discipline as the
+    *     prefix index's df order: writes and probes must share ONE
+    *     quantizer, and a stale quantizer costs cell balance (probe cost),
+    *     never correctness — assignment under any fixed centroids is a
+    *     pure function of the vector.
+    *   - `root/cells`: (vec_id, e, nrm) PARTITIONED BY cell — the inverted
+    *     lists. A probe's `cell IN (probed)` filter is partition pruning:
+    *     only ~nProbe/nCells of the corpus bytes are read.
+    *   - `root/codebooks`: the frozen per-subspace PQ codebooks
+    *     (sub, code, centroid) — m·kCodes rows, driver-small.
+    *   - `root/codes`: (vec_id, nrm, code_0..code_{m-1}) PARTITIONED BY
+    *     cell — the compressed scan path. An IVF+PQ probe prunes to the
+    *     probed cells' CODE partitions (one byte per subspace per vector)
+    *     and only the ~rerank survivors per query touch `cells`.
+    */
+  def buildAnn(embRaw: DataFrame, root: String,
+      nCells: Int = Similarity.IvfCells,
+      m: Int = Similarity.PqM,
+      kCodes: Int = Similarity.PqCodes): Unit = {
+    val s = embRaw.sparkSession
+    import s.implicits._
+    val e = Similarity.embeddedOf(embRaw).cache()
+    // each quantizer is fitted and written where the rows first need it
+    annRows(e, root, Build)(centroids = {
+      val cs = Similarity.fitIvfCentroids(e, nCells)
+      cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
+      cs
+    }, codebooks = {
+      val cbs = Similarity.fitPqCodebooksOf(e, m, kCodes)
+      cbs.zipWithIndex.flatMap { case (cb, j) =>
+        cb.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
+      }.toSeq.toDF("sub", "code", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")
+      cbs
+    })
+    e.unpersist()
   }
 
-  /** Replay-safe prefix-index read for micro-batch `beforeId`. */
-  def readPrefixBefore(s: SparkSession, root: String,
-      beforeId: Long): PrefixIndex = PrefixIndex(
-    freq = graft.ops.Tables.readCached(s, s"$root/freq"),
-    prefixes = readWithDeltasBefore(s, s"$root/prefixes", beforeId),
-    sets = readWithDeltasBefore(s, s"$root/sets", beforeId))
+  /** Assign + PQ-encode `embRaw` under the FROZEN stored quantizers and
+    * write its inverted-list + code rows. Returns the assigned cells
+    * frame. */
+  def writeAnn(embRaw: DataFrame, root: String, mode: WriteMode): DataFrame = {
+    val a = readAnn(embRaw.sparkSession, root)
+    annRows(Similarity.embeddedOf(embRaw), root, mode)(a.centroids,
+      a.codebooks)
+  }
+
+  /** The assignment is computed once and cached: both the cells and the
+    * codes rows derive from it. */
+  private def annRows(e: DataFrame, root: String, mode: WriteMode)(
+      centroids: => IndexedSeq[Array[Double]],
+      codebooks: => IndexedSeq[Array[Array[Double]]]): DataFrame = {
+    val assigned = Similarity.assignCells(e, centroids)
+      .select(col("vec_id"), col("e"), col("nrm"), col("cell")).cache()
+    assigned.count()
+    put(assigned, s"$root/cells", mode, Seq("cell"))
+    put(Similarity.encodePq(assigned, codebooks), s"$root/codes", mode,
+      Seq("cell"))
+    assigned.unpersist()
+    landed(e.sparkSession, root, mode)
+    assigned
+  }
+
+  /** The ANN index as a probe reads it: the frozen quantizers, collected
+    * driver-side on first use (nCells and m·kCodes rows), and the
+    * cell-keyed tables, whose batch segments a read bounded by `before`
+    * includes. */
+  final class AnnIndex private[IndexStore] (s: SparkSession, root: String,
+      before: Option[Long]) {
+    /** The frozen coarse quantizer. */
+    lazy val centroids: IndexedSeq[Array[Double]] =
+      Tables.readCached(s, s"$root/centroids").collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+        .sortBy(_._1).map(_._2).toIndexedSeq
+
+    /** The frozen PQ codebooks — codebooks(j)(c) = subspace-j centroid c. */
+    lazy val codebooks: IndexedSeq[Array[Array[Double]]] =
+      Tables.readCached(s, s"$root/codebooks").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        .groupBy(_._1).toIndexedSeq.sortBy(_._1)
+        .map { case (_, g) => g.sortBy(_._2).map(_._3).toArray }
+
+    /** The inverted lists (vec_id, e, nrm, cell). */
+    def cells: DataFrame = table(s, s"$root/cells", before)
+      .select(col("vec_id"), col("e"), col("nrm"),
+        col("cell").cast("int").as("cell"))
+
+    /** The PQ codes (vec_id, nrm, cell, code_0..). */
+    def codes: DataFrame = {
+      val df = table(s, s"$root/codes", before)
+      val codeCols = df.columns.filter(_.startsWith("code_"))
+        .sortBy(_.stripPrefix("code_").toInt)
+      df.select(col("vec_id") +: col("nrm") +:
+        col("cell").cast("int").as("cell") +: codeCols.map(col): _*)
+    }
+  }
+
+  def readAnn(s: SparkSession, root: String,
+      before: Option[Long] = None): AnnIndex = new AnnIndex(s, root, before)
 
   // --- physical maintenance (compaction, segment folding, rebuild) ----------
   //
   // Append-only maintenance is O(delta) in WORK but accumulates FILES: each
-  // `mode("append")` lands a fresh set of part files, and after thousands
-  // of intake batches the probe side pays listing + open overhead per tiny
+  // `Append` lands a fresh set of part files, and after thousands of
+  // intake batches the probe side pays listing + open overhead per tiny
   // file. Compaction is the physical half of the contract: rewrite the
   // same rows into few files, leaving every read view byte-identical.
   // Single-writer, offline-between-batches discipline (same as
   // ViewMaintain.compactViews): these run as table maintenance, never
-  // concurrently with an appender.
+  // concurrently with a writer.
 
   /** Parquet data-file count under `path` — the probe-side cost appends
     * accumulate. Skips `_`/`.`-prefixed side entries (incl. the streaming
@@ -365,7 +479,7 @@ object IndexStore {
   /** Rewrite the FLAT append table at `path` into `targetFiles` files iff
     * its data-file count exceeds `maxFiles`. Row set unchanged; the
     * streaming `_delta` subtree (and any other `_`-prefixed entry) is
-    * preserved untouched, so [[readWithDeltasBefore]] views are unchanged
+    * preserved untouched, so reads bounded by `before` are unchanged
     * too. Returns true iff a rewrite happened. (For partitioned tables —
     * the ANN cells — compaction must preserve the partition layout;
     * they get rewritten by their own rebuild, not this.) */
@@ -427,33 +541,35 @@ object IndexStore {
   }
 
   /** Fold every streaming delta segment with id < `upTo` into the
-    * standing table and drop the segment dirs: for any batch ≥ `upTo`,
-    * [[readWithDeltasBefore]] sees the identical row set before and after.
-    * `upTo` must not exceed the checkpoint's committed watermark (folding
-    * a segment an uncommitted batch might replay would change what that
-    * replay reads). Offline maintenance — run between batches; a crash
-    * between the append and the segment delete leaves duplicated rows, so
+    * standing table at `path` — landed through `partitionBy`, the
+    * table's partition columns (a plain append would mix flat files into
+    * a partitioned layout) — and drop the segment dirs: for any batch ≥
+    * `upTo`, a read bounded by `before` sees the identical row set before
+    * and after, and partition pruning covers the folded rows. `upTo` must
+    * not exceed the checkpoint's committed watermark (folding a segment an
+    * uncommitted batch might replay would change what that replay reads).
+    * Offline maintenance — run between batches; a crash between the
+    * append and the segment delete leaves duplicated rows, so
     * rerun-after-crash callers need the read-side-distinct tables
     * (digests) or a fresh [[compactTable]]-style rewrite. */
-  def foldDeltas(s: SparkSession, root: String, upTo: Long): Boolean = {
-    val segs = deltaSegmentIds(s, root).filter(_ < upTo)
-    if (segs.isEmpty) false
-    else {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      s.read.parquet(segs.map(v => s"$root/_delta/b=$v"): _*)
-        .write.mode("append").parquet(root)
+  def foldDeltas(s: SparkSession, path: String, upTo: Long,
+      partitionBy: Seq[String] = Nil): Boolean = {
+    val segs = segmentIds(s, path).filter(_ < upTo)
+    if (segs.nonEmpty) {
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      put(s.read.parquet(segs.map(segment(path, _)): _*), path,
+        Append, partitionBy)
       segs.foreach(v =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/_delta/b=$v"), true))
-      State.invalidate(s, root)
-      true
+        fs.delete(new org.apache.hadoop.fs.Path(segment(path, v)), true))
     }
+    segs.nonEmpty
   }
 
   /** Re-freeze the prefix dictionary: recompute document frequencies from
     * the full persisted set table and re-derive EVERY prefix under the new
-    * order — the periodic maintenance [[appendPrefix]]'s frozen-dictionary
-    * contract defers to. Appends between rebuilds blunt pruning sharpness
+    * order — the periodic maintenance [[writePrefix]]'s frozen-dictionary
+    * contract defers to. Writes between rebuilds blunt pruning sharpness
     * (stale f means a no-longer-rare hash may sit in a prefix), never
     * recall, so rebuild cadence is a cost knob, not a correctness one.
     * After a rebuild the index is row-identical to [[buildPrefix]] run
@@ -477,317 +593,29 @@ object IndexStore {
     State.invalidate(s, s"$root/prefixes")
   }
 
-  // --- ANN (IVF) standing index ---------------------------------------------
-
-  /** The vector twin of the prefix index: a persisted IVF structure so ANN
-    * probes never refit or re-assign the standing corpus.
-    *
-    *   - `root/centroids`: the coarse quantizer, FROZEN at build time —
-    *     (cell, centroid) — the same frozen-dictionary discipline as the
-    *     prefix index's df order: appends and probes must share ONE
-    *     quantizer, and a stale quantizer costs cell balance (probe cost),
-    *     never correctness — assignment under any fixed centroids is a
-    *     pure function of the vector.
-    *   - `root/cells`: (vec_id, e, nrm) PARTITIONED BY cell — the inverted
-    *     lists. A probe's `cell IN (probed)` filter is partition pruning:
-    *     only ~nProbe/nCells of the corpus bytes are read.
-    *   - `root/codebooks`: the frozen per-subspace PQ codebooks
-    *     (sub, code, centroid) — m·kCodes rows, driver-small.
-    *   - `root/codes`: (vec_id, nrm, code_0..code_{m-1}) PARTITIONED BY
-    *     cell — the compressed scan path. An IVF+PQ probe prunes to the
-    *     probed cells' CODE partitions (one byte per subspace per vector)
-    *     and only the ~rerank survivors per query touch `cells`.
-    *
-    * Appends assign + encode ONLY the delta under the frozen quantizers —
-    * O(delta), the standing corpus is never an input (spec-asserted via
-    * `inputFiles`, like the text indexes). */
-  // --- wide-band signature index (embedding near-dup intake) ----------------
-
-  /** Persist the standing vectors' wide-band signature table
-    * (vec_id, e, nrm, wb0..wb7) — the probe side of
-    * [[graft.ops.Similarity.cosineDupIntakeIndexed]]. Unlike the ANN
-    * index there is nothing to fit: band keys come from seeded-constant
-    * planes, so build, append, and in-query recompute all produce the
-    * same signature for a vector — which is exactly why the indexed
-    * intake shares the recompute form's oracle. */
-  def buildSig(embRaw: DataFrame, path: String): Unit = {
-    graft.ops.Similarity.wideSigOf(embRaw)
-      .write.mode("overwrite").parquet(path)
-    State.invalidate(embRaw.sparkSession, path)
-  }
-
-  /** Sign ONLY the delta vectors and append their rows — O(delta); the
-    * standing corpus is not an input. Returns the appended frame. */
-  def appendSig(deltaRaw: DataFrame, path: String): DataFrame = {
-    val sig = graft.ops.Similarity.wideSigOf(deltaRaw)
-    sig.write.mode("append").parquet(path)
-    State.invalidate(deltaRaw.sparkSession, path)
-    sig
-  }
-
-  def readSig(s: SparkSession, path: String): DataFrame =
-    graft.ops.Tables.readCached(s, path)
-
-  /** Batch-keyed variant of [[appendSig]] for the streaming intake sink:
-    * one overwritten `b=<batchId>` segment — crash-replay rewrites the
-    * same bytes. */
-  def appendSigVersioned(deltaRaw: DataFrame, path: String,
-      batchId: Long): DataFrame = {
-    val sig = graft.ops.Similarity.wideSigOf(deltaRaw)
-    writeDeltaSegment(sig, path, batchId)
-    sig
-  }
-
-  /** Replay-safe signature-index read for micro-batch `beforeId`. */
-  def readSigBefore(s: SparkSession, path: String,
-      beforeId: Long): DataFrame =
-    readWithDeltasBefore(s, path, beforeId)
-
-  // --- phash signature index (multimodal near-dup intake) -------------------
-
-  /** Persist the standing assets' perceptual-hash signature table
-    * (asset_id, f, lv, k) — the probe side of
-    * [[graft.ops.Multimodal.mmDupIntakeIndexed]]. Like the wide-band
-    * vector index there is nothing to fit: the signature is a pure
-    * function of the decoded bytes, so build, append, and in-query
-    * recompute all produce the same row for an asset — which is exactly
-    * why the indexed intake shares the recompute form's oracle. At scale
-    * this is THE multimodal win: payload bytes are decoded once at index
-    * time, and intake probes read 16 doubles + a 48-char key per standing
-    * asset instead of re-decoding binary content. */
-  def buildPhash(assets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String): Unit = {
-    graft.ops.Multimodal.phashOf(assets)
-      .write.mode("overwrite").parquet(path)
-    State.invalidate(assets.sparkSession, path)
-  }
-
-  /** Decode + sign ONLY the delta assets and append their rows —
-    * O(delta); the standing corpus is not an input. Returns the appended
-    * frame. */
-  def appendPhash(deltaAssets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String): DataFrame = {
-    val sig = graft.ops.Multimodal.phashOf(deltaAssets)
-    sig.write.mode("append").parquet(path)
-    State.invalidate(deltaAssets.sparkSession, path)
-    sig
-  }
-
-  def readPhash(s: SparkSession, path: String): DataFrame =
-    graft.ops.Tables.readCached(s, path)
-
-  /** Batch-keyed variant of [[appendPhash]] for the streaming intake
-    * sink: one overwritten `b=<batchId>` segment — crash-replay rewrites
-    * the same bytes. */
-  def appendPhashVersioned(
-      deltaAssets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String, batchId: Long): DataFrame = {
-    val sig = graft.ops.Multimodal.phashOf(deltaAssets)
-    writeDeltaSegment(sig, path, batchId)
-    sig
-  }
-
-  /** Replay-safe phash-index read for micro-batch `beforeId`. */
-  def readPhashBefore(s: SparkSession, path: String,
-      beforeId: Long): DataFrame =
-    readWithDeltasBefore(s, path, beforeId)
-
-  // --- audio signature index (audio near-dup intake) ------------------------
-
-  /** Persist the standing assets' audio fingerprint table
-    * (asset_id, g, lv, k) — the probe side of
-    * [[graft.ops.AudioDedup.audioDupIntakeIndexed]]. Nothing is fitted
-    * (the signature is a pure function of the decoded PCM), so build,
-    * append, and in-query recompute all produce the same row — the
-    * indexed intake shares the recompute form's oracle, exactly like the
-    * phash index above. At scale: standing audio is DECODED ONCE, at
-    * index time; intake probes read 16 longs + 16 ints + a 48-char key
-    * per standing asset instead of re-reading payload bytes. */
-  def buildAudioSig(assets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String): Unit = {
-    graft.ops.AudioDedup.audioSigOf(assets)
-      .write.mode("overwrite").parquet(path)
-    State.invalidate(assets.sparkSession, path)
-  }
-
-  /** Decode + sign ONLY the delta assets and append — O(delta); the
-    * standing corpus is not an input. Returns the appended frame. */
-  def appendAudioSig(
-      deltaAssets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String): DataFrame = {
-    val sig = graft.ops.AudioDedup.audioSigOf(deltaAssets)
-    sig.write.mode("append").parquet(path)
-    State.invalidate(deltaAssets.sparkSession, path)
-    sig
-  }
-
-  def readAudioSig(s: SparkSession, path: String): DataFrame =
-    graft.ops.Tables.readCached(s, path)
-
-  /** Batch-keyed variant of [[appendAudioSig]] for the streaming intake
-    * sink: one overwritten `b=<batchId>` segment — crash-replay rewrites
-    * the same bytes. */
-  def appendAudioSigVersioned(
-      deltaAssets: org.apache.spark.sql.Dataset[graft.ops.Asset],
-      path: String, batchId: Long): DataFrame = {
-    val sig = graft.ops.AudioDedup.audioSigOf(deltaAssets)
-    writeDeltaSegment(sig, path, batchId)
-    sig
-  }
-
-  /** Replay-safe audio-index read for micro-batch `beforeId`. */
-  def readAudioSigBefore(s: SparkSession, path: String,
-      beforeId: Long): DataFrame =
-    readWithDeltasBefore(s, path, beforeId)
-
-  def buildAnn(embRaw: DataFrame, root: String,
-      nCells: Int = graft.ops.Similarity.IvfCells,
-      m: Int = graft.ops.Similarity.PqM,
-      kCodes: Int = graft.ops.Similarity.PqCodes): Unit = {
-    val s = embRaw.sparkSession
-    import s.implicits._
-    val e = graft.ops.Similarity.embeddedOf(embRaw).cache()
-    val cs = graft.ops.Similarity.fitIvfCentroids(e, nCells)
-    cs.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/centroids")
-    val assigned = graft.ops.Similarity.assignCells(e, cs)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(s"$root/cells")
-    val cbs = graft.ops.Similarity.fitPqCodebooksOf(e, m, kCodes)
-    cbs.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
-    }.toSeq.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/codebooks")
-    graft.ops.Similarity.encodePq(assigned, cbs)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$root/codes")
-    e.unpersist()
-    State.invalidate(s, root)
-  }
-
-  /** Assign + PQ-encode ONLY the delta vectors under the FROZEN stored
-    * quantizers and append their inverted-list + code rows — O(delta).
-    * Returns the appended cells frame for input-file assertions. */
-  def appendAnn(deltaRaw: DataFrame, root: String): DataFrame = {
-    val s = deltaRaw.sparkSession
-    val cs = readAnnCentroids(s, root)
-    val assigned = graft.ops.Similarity
-      .assignCells(graft.ops.Similarity.embeddedOf(deltaRaw), cs)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell"))
-    assigned.write.partitionBy("cell").mode("append").parquet(s"$root/cells")
-    graft.ops.Similarity.encodePq(assigned, readAnnCodebooks(s, root))
-      .write.partitionBy("cell").mode("append").parquet(s"$root/codes")
-    State.invalidate(s, root)
-    assigned
-  }
-
-  /** The frozen coarse quantizer — nCells rows, driver-bounded. */
-  def readAnnCentroids(s: SparkSession,
-      root: String): IndexedSeq[Array[Double]] =
-    graft.ops.Tables.readCached(s, s"$root/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2).toIndexedSeq
-
-  /** The cell-partitioned inverted lists (vec_id, e, nrm, cell). */
-  def readAnnCells(s: SparkSession, root: String): DataFrame =
-    graft.ops.Tables.readCached(s, s"$root/cells")
-      .select(col("vec_id"), col("e"), col("nrm"),
-        col("cell").cast("int").as("cell"))
-
-  /** ANN variant of [[foldDeltas]]: the base cells/codes tables are
-    * PARTITIONED BY cell, so folded rows must land through partitionBy
-    * appends (a plain root append would mix flat files into a partitioned
-    * layout). Same watermark + crash caveats as [[foldDeltas]]; read views
-    * ([[readAnnCellsBefore]] and the codes twin) see identical row sets
-    * before and after, and partition pruning now covers the folded rows. */
-  def foldAnnDeltas(s: SparkSession, root: String, upTo: Long): Boolean = {
-    var any = false
-    Seq("cells", "codes").foreach { t =>
-      val path = s"$root/$t"
-      val segs = deltaSegmentIds(s, path).filter(_ < upTo)
-      if (segs.nonEmpty) {
-        any = true
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        s.read.parquet(segs.map(v => s"$path/_delta/b=$v"): _*)
-          .write.partitionBy("cell").mode("append").parquet(path)
-        segs.foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$path/_delta/b=$v"), true))
-        State.invalidate(s, path)
-      }
-    }
-    any
-  }
-
   /** Re-freeze the ANN quantizers: fold outstanding delta segments, then
     * re-fit coarse centroids AND PQ codebooks over the full persisted
     * corpus and re-assign + re-encode every vector — the periodic
     * maintenance the frozen-quantizer contract defers to (the vector twin
-    * of [[rebuildPrefix]]). Appends between rebuilds cost cell balance and
+    * of [[rebuildPrefix]]). Writes between rebuilds cost cell balance and
     * quantization sharpness (probe cost/precision), never correctness.
     * Offline-only: folds at Long.MaxValue, so never run while a streaming
     * intake checkpoint could still replay a batch. The corpus is staged to
     * a side directory first because [[buildAnn]] overwrites the very cells
     * table it would otherwise still be reading from. */
   def rebuildAnn(s: SparkSession, root: String,
-      nCells: Int = graft.ops.Similarity.IvfCells,
-      m: Int = graft.ops.Similarity.PqM,
-      kCodes: Int = graft.ops.Similarity.PqCodes): Unit = {
-    foldAnnDeltas(s, root, Long.MaxValue)
+      nCells: Int = Similarity.IvfCells,
+      m: Int = Similarity.PqM,
+      kCodes: Int = Similarity.PqCodes): Unit = {
+    Seq("cells", "codes").foreach(t =>
+      foldDeltas(s, s"$root/$t", Long.MaxValue, Seq("cell")))
     val staging = s"$root/_rebuild_src"
-    readAnnCells(s, root).select(col("vec_id"), col("e").as("embedding"))
+    readAnn(s, root).cells.select(col("vec_id"), col("e").as("embedding"))
       .write.mode("overwrite").parquet(staging)
-    buildAnn(graft.ops.Tables.readCached(s, staging), root, nCells, m, kCodes)
+    buildAnn(Tables.readCached(s, staging), root, nCells, m, kCodes)
     val p = new org.apache.hadoop.fs.Path(staging)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     ()
-  }
-
-  /** Batch-keyed ANN append for the streaming vector intake sink: assign +
-    * PQ-encode the batch under the FROZEN stored quantizers, written as
-    * `b=<batchId>` overwrite segments next to the base cells/codes tables —
-    * crash-replay rewrites identical bytes (assignment and encode are pure
-    * functions of the vector given the frozen quantizers). Returns the
-    * assigned segment frame for input-file assertions. */
-  def appendAnnVersioned(deltaRaw: DataFrame, root: String,
-      batchId: Long): DataFrame = {
-    val s = deltaRaw.sparkSession
-    val cs = readAnnCentroids(s, root)
-    val assigned = graft.ops.Similarity
-      .assignCells(graft.ops.Similarity.embeddedOf(deltaRaw), cs)
-      .select(col("vec_id"), col("e"), col("nrm"), col("cell")).cache()
-    assigned.count()
-    writeDeltaSegment(assigned, s"$root/cells", batchId)
-    writeDeltaSegment(
-      graft.ops.Similarity.encodePq(assigned, readAnnCodebooks(s, root)),
-      s"$root/codes", batchId)
-    assigned.unpersist()
-    assigned
-  }
-
-  /** Replay-safe cells read for micro-batch `beforeId`: base partitions
-    * plus every `b < beforeId` delta segment. */
-  def readAnnCellsBefore(s: SparkSession, root: String,
-      beforeId: Long): DataFrame =
-    readWithDeltasBefore(s, s"$root/cells", beforeId)
-      .select(col("vec_id"), col("e"), col("nrm"),
-        col("cell").cast("int").as("cell"))
-
-  /** The frozen PQ codebooks — codebooks(j)(c) = subspace-j centroid c. */
-  def readAnnCodebooks(s: SparkSession,
-      root: String): IndexedSeq[Array[Array[Double]]] =
-    graft.ops.Tables.readCached(s, s"$root/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toIndexedSeq.sortBy(_._1)
-      .map { case (_, g) => g.sortBy(_._2).map(_._3).toArray }
-
-  /** The cell-partitioned PQ codes (vec_id, nrm, cell, code_0..). */
-  def readAnnCodes(s: SparkSession, root: String): DataFrame = {
-    val df = graft.ops.Tables.readCached(s, s"$root/codes")
-    val codeCols = df.columns.filter(_.startsWith("code_"))
-      .sortBy(_.stripPrefix("code_").toInt)
-    df.select(col("vec_id") +: col("nrm") +:
-      col("cell").cast("int").as("cell") +: codeCols.map(col): _*)
   }
 
   // --- rebuild trigger policy (drift metrics) --------------------------------
@@ -812,8 +640,9 @@ object IndexStore {
   }
 
   def annCellOccupancy(s: SparkSession, root: String): AnnOccupancy = {
-    val nCells = readAnnCentroids(s, root).length
-    val counts = readAnnCellsBefore(s, root, Long.MaxValue)
+    val ann = readAnn(s, root, before = Some(Long.MaxValue))
+    val nCells = ann.centroids.length
+    val counts = ann.cells
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     AnnOccupancy(nCells, counts.sum, if (counts.isEmpty) 0L else counts.max)
@@ -850,7 +679,7 @@ object IndexStore {
     val frozen = graft.ops.Tables.readCached(s, s"$root/freq")
       .select(col("h"), col("f").as("f_old"))
     val current = Dedup.prefixFreqOf(
-        readWithDeltasBefore(s, s"$root/sets", Long.MaxValue))
+        readPrefix(s, root, before = Some(Long.MaxValue)).sets)
       .select(col("h"), col("f").as("f_new"))
     val joined = frozen.join(current, Seq("h"), "full_outer")
       .select(coalesce(col("f_old"), lit(0L)).as("a"),
@@ -1056,13 +885,13 @@ object IndexStore {
   // [[graft.State]]'s session scope under their artifact root: invisible
   // to SparkEntry.fresh's clearCache(), never released between queries,
   // and dropped — blocks unpersisted — by any writer of that root. The
-  // mutable delta-segment views (readXxxBefore, used by streaming) are not
-  // resident, and neither is any query result.
+  // reads bounded by `before` (used by streaming) are not resident, and
+  // neither is any query result.
 
   /** The persisted standing winnow index for `dir` (memoized build). */
   def standingWinnowIndex(s: SparkSession, dir: String): DataFrame =
     readWinnow(s, State.built(s, "winnow", dir)(
-      buildWinnow(Dedup.deltaSplit(Tables.documents(s, dir))._2, _)))
+      writeWinnow(Dedup.deltaSplit(Tables.documents(s, dir))._2, _, Build)))
 
   /** The persisted standing postings index for `dir` (memoized build). */
   def standingPostingsIndex(s: SparkSession, dir: String): DataFrame =
@@ -1091,8 +920,8 @@ object IndexStore {
     * deployment's would). Returns (frozen centroids, cells). */
   def standingAnnIndex(s: SparkSession,
       dir: String): (IndexedSeq[Array[Double]], DataFrame) = {
-    val root = annRoot(s, dir)
-    (readAnnCentroids(s, root), readAnnCells(s, root))
+    val ann = readAnn(s, annRoot(s, dir))
+    (ann.centroids, ann.cells)
   }
 
   /** The SAME standing index exposed through its PQ layer: (frozen
@@ -1101,16 +930,15 @@ object IndexStore {
     * ([[standingAnnIndex]]) and IVF+PQ probes — the deployment shape. */
   def standingAnnPq(s: SparkSession, dir: String): (IndexedSeq[Array[Double]],
       IndexedSeq[Array[Array[Double]]], DataFrame, DataFrame) = {
-    val root = annRoot(s, dir)
-    (readAnnCentroids(s, root), readAnnCodebooks(s, root),
-      readAnnCodes(s, root), readAnnCells(s, root))
+    val ann = readAnn(s, annRoot(s, dir))
+    (ann.centroids, ann.codebooks, ann.codes, ann.cells)
   }
 
   private def annRoot(s: SparkSession, dir: String): String =
     State.built(s, "ann", dir) { p =>
       val (inc, ex) = annDeltaSplit(Tables.embeddings(s, dir))
       buildAnn(ex, p)
-      appendAnn(inc, p)
+      writeAnn(inc, p, Append)
     }
 
   /** Persist a fitted DSIR importance model: the B-row lam vector, the
@@ -1227,14 +1055,14 @@ object IndexStore {
   /** The persisted standing wide-band signature index for `dir`'s
     * embeddings (memoized build over the STANDING split). */
   def standingSigIndex(s: SparkSession, dir: String): DataFrame =
-    readSig(s, State.built(s, "sig", dir)(buildSig(graft.ops.Similarity
-      .embDeltaSplit(graft.ops.Tables.embeddings(s, dir))._2, _)))
+    readSig(s, State.built(s, "sig", dir)(writeSig(Similarity
+      .embDeltaSplit(Tables.embeddings(s, dir))._2, _, Build)))
 
   /** Root of the standing phash index for `dir`'s assets (memoized build
     * over the STANDING split). */
   private[graft] def phashRoot(s: SparkSession, dir: String): String =
-    State.built(s, "phash", dir)(buildPhash(graft.ops.Multimodal
-      .mmDeltaSplit(graft.ops.Multimodal.synthesizeAssets(s, dir))._2, _))
+    State.built(s, "phash", dir)(writePhash(Multimodal
+      .mmDeltaSplit(Multimodal.synthesizeAssets(s, dir))._2, _, Build))
 
   /** The persisted standing phash index for `dir`'s assets
     * (session-resident — see "harness fixtures"). */
@@ -1246,8 +1074,8 @@ object IndexStore {
   /** Root of the standing audio-signature index for `dir`'s WAV assets
     * (memoized build over the STANDING split). */
   private[graft] def audioSigRoot(s: SparkSession, dir: String): String =
-    State.built(s, "audiosig", dir)(buildAudioSig(graft.ops.Multimodal
-      .mmDeltaSplit(graft.ops.AudioDedup.synthesizeWavAssets(s, dir))._2, _))
+    State.built(s, "audiosig", dir)(writeAudioSig(Multimodal
+      .mmDeltaSplit(AudioDedup.synthesizeWavAssets(s, dir))._2, _, Build))
 
   /** The persisted standing audio-signature index for `dir`'s WAV assets
     * (session-resident — see "harness fixtures"). */
@@ -1259,7 +1087,7 @@ object IndexStore {
   /** Root of the standing dedup index for `dir` (memoized build). */
   private[graft] def dedupRoot(s: SparkSession, dir: String): String =
     State.built(s, "dedup", dir)(
-      buildDedup(Dedup.deltaSplit(Tables.documents(s, dir))._2, _))
+      writeDedup(Dedup.deltaSplit(Tables.documents(s, dir))._2, _, Build))
 
   /** The persisted standing dedup index for `dir` (session-resident —
     * see "harness fixtures"). */

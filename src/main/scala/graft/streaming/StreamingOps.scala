@@ -5,7 +5,11 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+  StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues,
+  ValueState}
+
+import graft.sources.IndexStore
+import graft.sources.IndexStore.WriteMode.Batch
 
 /** Input shape for streaming ops: the events table as a stream. */
 final case class StreamEvent(event_id: Long, ts: Timestamp, user_id: Long,
@@ -410,49 +414,60 @@ object StreamingOps {
         col("__hit").isNotNull.as("is_dup"))
   }
 
+  /** Start `df` as a checkpointed append stream that runs `f(batch,
+    * batchId)` on every micro-batch — the one `foreachBatch` site behind
+    * every sink below.
+    *
+    * Exactly-once effect: after a crash, Structured Streaming re-runs the
+    * last uncommitted micro-batch under the SAME batch id, so `f` is
+    * exactly-once in effect iff re-running it with that id leaves the same
+    * state as running it once. The index-maintaining sinks get that from
+    * the batch-segment discipline ([[graft.sources.IndexStore.WriteMode]]):
+    * they read their index bounded by `before = Some(batchId)` — never the
+    * batch's own, possibly half-landed, segment — so a replay recomputes
+    * IDENTICAL output, and every write is a `b=<batchId>`-keyed overwrite
+    * that rewrites the same bytes. (The naive append ordering is not
+    * recoverable by ordering alone: index first loses the output on
+    * replay, output first duplicates it.) Sinks whose artifacts are frozen
+    * for the stream's lifetime are stateless: their output is a pure
+    * function of (batch, artifacts), written as a `b=<batchId>` overwrite.
+    * Each sink's output is therefore partitioned by micro-batch
+    * (`b=<id>` directories) — per-batch lineage for free. */
+  private def foreachBatchSink(df: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch(f)
+      .start()
+
   /** Self-maintaining intake sink — the closed loop of the curation front
     * door: each micro-batch of incoming docs is triaged against the
     * PERSISTED curation-digest index ([[graft.sources.IndexStore]]),
     * accepted (non-duplicate) docs land in `acceptedPath`, and their
-    * digests are APPENDED to the index inside the same foreachBatch — so
+    * digests are written to the index inside the same micro-batch — so
     * batch N+1 deduplicates against everything accepted through batch N
     * without any rescan. Per-batch cost is O(batch + collisions): the
-    * probe join reads the index, the appends are delta-proportional
-    * parquet writes. Exactly-once effect by the versioned-segment
-    * discipline ([[graft.sources.IndexStore.writeDeltaSegment]]): the
-    * triage reads the standing index plus only delta segments with id <
-    * batchId — never the batch's own, possibly half-landed, segment — so
-    * a crash-replay recomputes IDENTICAL verdicts and both writes are
-    * `b=<batchId>`-keyed overwrites that rewrite the same bytes. (The
-    * naive append ordering is not recoverable by ordering alone: digests
-    * first loses the accepted docs on replay, accepted docs first
-    * duplicates them.) The accepted output is therefore partitioned by
-    * micro-batch (`b=<id>` directories) — per-batch lineage for free. */
+    * probe join reads the index, the writes are delta-proportional
+    * parquet writes. */
   def intakeSink(incoming: DataFrame, indexPath: String,
-      acceptedPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        intakeBatch(batch, batchId, indexPath, acceptedPath)
-      }
-      .start()
+      acceptedPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      intakeBatch(_, _, indexPath, acceptedPath))
 
   /** One [[intakeSink]] micro-batch — exposed so the spec can replay a
     * batch id and assert the crash-recovery contract (same bytes, no
     * duplicates, no verdict flips). */
   def intakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
       acceptedPath: String): Unit = {
-    import graft.sources.IndexStore
     val s = batch.sparkSession
     val triaged = curationFrontDoorWithDigests(batch,
-      IndexStore.readWithDeltasBefore(s, indexPath, batchId))
+      IndexStore.readCurationDigests(s, indexPath, Some(batchId)))
       .localCheckpoint(true) // pin: consumed by both writes below
     val acceptedIds = triaged.filter(!col("is_dup")).select(col("doc_id"))
     val accepted = batch.join(acceptedIds, "doc_id").localCheckpoint(true)
     accepted.write.mode("overwrite").parquet(s"$acceptedPath/b=$batchId")
-    IndexStore.appendCurationDigestsVersioned(accepted, indexPath, batchId)
+    IndexStore.writeCurationDigests(accepted, indexPath, Batch(batchId))
     ()
   }
 
@@ -460,62 +475,57 @@ object StreamingOps {
     * gate widened to the complete intake policy: each micro-batch is
     * triaged exact AND near (MinHash band probe + exact-Jaccard verify)
     * against the persisted [[graft.sources.IndexStore]] dedup index, the
-    * per-doc verdicts land in `verdictPath`, and NOVEL docs append to all
-    * three index tables inside the same foreachBatch — so batch N+1 both
-    * exact- and near-deduplicates against everything accepted through
-    * batch N. Per-batch cost is O(batch × collisions); the standing
-    * corpus is never rescanned. Same exactly-once recipe as
-    * [[intakeSink]]: the triage reads index segments with id < batchId
-    * only, so a crash-replay recomputes identical verdicts (no
-    * novel→exact flips from seeing its own landed segment) and the
-    * verdict write is a `b=<batchId>`-keyed overwrite. */
+    * per-doc verdicts land in `verdictPath`, and NOVEL docs are written to
+    * all three index tables inside the same micro-batch — so batch N+1
+    * both exact- and near-deduplicates against everything accepted
+    * through batch N (a replay sees no novel→exact flips from its own
+    * landed segment). Per-batch cost is O(batch × collisions); the
+    * standing corpus is never rescanned. */
   def triageSink(incoming: DataFrame, indexRoot: String,
-      verdictPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        triageBatch(batch, batchId, indexRoot, verdictPath)
-      }
-      .start()
+      verdictPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      triageBatch(_, _, indexRoot, verdictPath))
+
+  /** One [[triageSink]] micro-batch — exposed for the replay spec. */
+  def triageBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+      verdictPath: String): Unit = {
+    val s = batch.sparkSession
+    val verdicts = graft.ops.Dedup.triageAgainstIndex(batch,
+      IndexStore.readDedup(s, indexRoot, Some(batchId)))
+      .localCheckpoint(true) // pin: consumed by the write and the novel join
+    verdicts.write.mode("overwrite").parquet(s"$verdictPath/b=$batchId")
+    val novel = batch.join(
+      verdicts.filter(col("verdict") === "novel").select(col("doc_id")),
+      "doc_id")
+    IndexStore.writeDedup(novel, indexRoot, Batch(batchId))
+    ()
+  }
 
   /** Exact-recall streaming intake — the prefix-join twin of
     * [[triageSink]]: each micro-batch probes the persisted PREFIX index
     * ([[graft.ops.Dedup.prefixProbe]] — lossless candidates, exact
-    * Jaccard verify, no banding probability) and then appends its own
+    * Jaccard verify, no banding probability) and then writes its own
     * sets + prefixes under the FROZEN dictionary inside the same
-    * foreachBatch, so batch N+1 exact-dedups against everything through
+    * micro-batch, so batch N+1 exact-dedups against everything through
     * batch N. Emitted pairs are (standing doc_a, batch doc_b, jaccard).
-    *
-    * Same exactly-once recipe as the other sinks: the probe reads index
-    * segments with id < batchId only and both writes are
-    * `b=<batchId>`-keyed overwrites — a crash-replay recomputes identical
-    * pairs and rewrites the same bytes. The dictionary stays frozen
-    * across batches (stale df blunts pruning, never recall), refreshed
-    * only by [[graft.sources.IndexStore.rebuildPrefix]] maintenance. */
+    * The dictionary stays frozen across batches (stale df blunts pruning,
+    * never recall), refreshed only by
+    * [[graft.sources.IndexStore.rebuildPrefix]] maintenance. */
   def prefixIntakeSink(incoming: DataFrame, indexRoot: String,
-      pairsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        prefixIntakeBatch(batch, batchId, indexRoot, pairsPath)
-      }
-      .start()
+      pairsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      prefixIntakeBatch(_, _, indexRoot, pairsPath))
 
   /** One [[prefixIntakeSink]] micro-batch — exposed for the replay spec. */
   def prefixIntakeBatch(batch: DataFrame, batchId: Long, indexRoot: String,
       pairsPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    val idx = IndexStore.readPrefixBefore(s, indexRoot, batchId)
+    val idx = IndexStore.readPrefix(batch.sparkSession, indexRoot,
+      Some(batchId))
     // prefixProbe materializes its pairs (localCheckpoint) before return,
-    // so the index append below can't change what the write sees
+    // so the index write below can't change what the pair write sees
     val pairs = graft.ops.Dedup.prefixProbe(batch, idx)
     pairs.write.mode("overwrite").parquet(s"$pairsPath/b=$batchId")
-    IndexStore.appendPrefixVersioned(batch, indexRoot, batchId)
+    IndexStore.writePrefix(batch, indexRoot, Batch(batchId))
     ()
   }
 
@@ -524,76 +534,138 @@ object StreamingOps {
     * first PROBES the index for its top-k nearest standing neighbors
     * (flat-IVF gate under the index's FROZEN centroids — the arriving-data
     * shape of similarity triage: near-dup flagging, semantic routing),
-    * then appends its own cell + PQ-code rows inside the same
-    * foreachBatch, so batch N+1 probes against everything through batch N.
-    *
-    * Same exactly-once recipe as the other intake sinks: the probe reads
-    * cells segments with id < batchId only, neighbor output and index
-    * segments are `b=<batchId>`-keyed overwrites — a crash-replay
-    * recomputes identical rows and rewrites the same bytes. Quantizers
+    * then writes its own cell + PQ-code rows inside the same micro-batch,
+    * so batch N+1 probes against everything through batch N. Quantizers
     * stay frozen across batches (stale centroids cost cell balance, never
-    * correctness); periodic re-fits are offline maintenance, like
-    * [[graft.sources.IndexStore.rebuildPrefix]]. */
+    * correctness); periodic re-fits are offline maintenance
+    * ([[graft.sources.IndexStore.rebuildAnn]]). */
   def annIntakeSink(incoming: DataFrame, indexRoot: String,
-      neighborsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annIntakeBatch(batch, batchId, indexRoot, neighborsPath)
-      }
-      .start()
+      neighborsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      annIntakeBatch(_, _, indexRoot, neighborsPath))
+
+  /** One [[annIntakeSink]] micro-batch — exposed for the replay spec. */
+  def annIntakeBatch(batch: DataFrame, batchId: Long, indexRoot: String,
+      neighborsPath: String): Unit = {
+    val standing = IndexStore.readAnn(batch.sparkSession, indexRoot,
+      Some(batchId))
+    val q = graft.ops.Similarity.embeddedOf(batch)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"),
+        col("nrm").as("qn"))
+    // selfExclude=false: the incoming batch's vec_ids are a different id
+    // space from the standing index — an id collision must not drop a
+    // legitimate standing neighbor
+    val neighbors = graft.ops.Similarity
+      .ivfProbeQueries(q, standing.cells, standing.centroids,
+        graft.ops.Similarity.AnnK, graft.ops.Similarity.IvfProbe,
+        pruneCells = true, selfExclude = false)
+    // materialize before the index write below can extend the cells view
+    neighbors.write.mode("overwrite").parquet(s"$neighborsPath/b=$batchId")
+    IndexStore.writeAnn(batch, indexRoot, Batch(batchId))
+    ()
+  }
 
   /** Streaming embedding NEAR-DUP intake over the persisted wide-band
     * signature index — the near-dup twin of [[annIntakeSink]] (which
     * answers top-k similarity; this answers "is the arriving vector a
     * near-duplicate of anything standing"): each micro-batch of raw
-    * embeddings is triaged against the signature segments with id <
-    * batchId (bipartite band gate + exact cosine verify, the same
-    * dataflow as the `emb_dup_intake` queries), its per-vector
-    * near/novel verdicts land as a `b=<batchId>` overwrite, and the
-    * batch's own signatures append inside the same foreachBatch — so
-    * batch N+1 catches near-dups of batch N. Exactly-once by the family
-    * recipe: reads bounded to segments < batchId, both writes
-    * batch-keyed overwrites, signatures under seeded-constant planes
-    * deterministic — a crash-replay rewrites identical bytes. */
+    * embeddings is triaged against the signature index (bipartite band
+    * gate + exact cosine verify, the same dataflow as the
+    * `emb_dup_intake` queries), its per-vector near/novel verdicts land
+    * in `verdictsPath`, and the batch's own signatures are written inside
+    * the same micro-batch — so batch N+1 catches near-dups of batch N.
+    * Signatures come from seeded-constant planes, so a replay rewrites
+    * identical bytes. */
   def sigIntakeSink(incoming: DataFrame, indexPath: String,
-      verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sigIntakeBatch(batch, batchId, indexPath, verdictsPath)
-      }
-      .start()
+      verdictsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      sigIntakeBatch(_, _, indexPath, verdictsPath))
+
+  /** One [[sigIntakeSink]] micro-batch — exposed for the replay spec. */
+  def sigIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
+      verdictsPath: String): Unit = {
+    val standing = IndexStore.readSig(batch.sparkSession, indexPath,
+      Some(batchId))
+    // triage materializes (localCheckpoint) before return, so the index
+    // write below can't change what the verdict write sees
+    val verdicts = graft.ops.Similarity.triageVectorsAgainstSig(
+      batch, standing)
+    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    IndexStore.writeSig(batch, indexPath, Batch(batchId))
+    ()
+  }
+
+  /** Streaming multimodal intake sink: each micro-batch of assets is
+    * triaged against the PERSISTED phash index (near/novel verdicts —
+    * the multimodal twin of [[sigIntakeSink]]), then its signatures are
+    * written as one batch-keyed segment — so batch N+1's assets dedup
+    * against batch N's. Decode runs ONCE per asset, at intake; the index
+    * never stores payload bytes, and the signature is a pure function of
+    * the bytes. */
+  def phashIntakeSink(incoming: DataFrame, indexPath: String,
+      verdictsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      phashIntakeBatch(_, _, indexPath, verdictsPath))
+
+  /** One [[phashIntakeSink]] micro-batch — exposed for the replay spec. */
+  def phashIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
+      verdictsPath: String): Unit = {
+    val s = batch.sparkSession
+    import s.implicits._
+    val assets = batch.as[graft.ops.Asset]
+    val standing = IndexStore.readPhash(s, indexPath, Some(batchId))
+    // triage materializes (localCheckpoint) before return, so the index
+    // write below can't change what the verdict write sees
+    val verdicts = graft.ops.Multimodal
+      .triageAssetsAgainstPhash(assets, standing)
+    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    IndexStore.writePhash(assets, indexPath, Batch(batchId))
+    ()
+  }
+
+  /** Streaming AUDIO intake sink: each micro-batch of WAV assets is
+    * triaged against the PERSISTED audio-signature index (near/novel
+    * verdicts — the audio twin of [[phashIntakeSink]]), then its
+    * signatures are written as one batch-keyed segment, so batch N+1's
+    * audio dedups against batch N's. Decode runs ONCE per asset, at
+    * intake; the index never stores payload bytes, and the fingerprint is
+    * a pure function of the bytes. */
+  def audioIntakeSink(incoming: DataFrame, indexPath: String,
+      verdictsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      audioIntakeBatch(_, _, indexPath, verdictsPath))
+
+  /** One [[audioIntakeSink]] micro-batch — exposed for the replay spec. */
+  def audioIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
+      verdictsPath: String): Unit = {
+    val s = batch.sparkSession
+    import s.implicits._
+    val assets = batch.as[graft.ops.Asset]
+    val standing = IndexStore.readAudioSig(s, indexPath, Some(batchId))
+    // triage materializes (localCheckpoint) before return, so the index
+    // write below can't change what the verdict write sees
+    val verdicts = graft.ops.AudioDedup
+      .triageAssetsAgainstAudioSig(assets, standing)
+    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    IndexStore.writeAudioSig(assets, indexPath, Batch(batchId))
+    ()
+  }
 
   /** Frozen-model DSIR intake sink: each micro-batch of documents is
     * scored against the PERSISTED standing importance model
     * ([[graft.sources.IndexStore.standingDsirModel]]) and gated by its
-    * frozen per-source thresholds; verdicts land batch-keyed. Unlike the
-    * dedup/signature sinks the model never changes inside the stream
-    * (refit is offline maintenance, like BPE's), so the sink is
-    * STATELESS and trivially exactly-once: a crash-replay rescoring of
-    * batch N recomputes identical verdicts and rewrites the same b=N
-    * bytes. */
+    * frozen per-source thresholds; verdicts land batch-keyed. The model
+    * never changes inside the stream (refit is offline maintenance, like
+    * BPE's), so the sink is stateless. */
   def dsirIntakeSink(incoming: DataFrame, modelRoot: String,
-      verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dsirIntakeBatch(batch, batchId, modelRoot, verdictsPath)
-      }
-      .start()
+      verdictsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      dsirIntakeBatch(_, _, modelRoot, verdictsPath))
 
   /** One [[dsirIntakeSink]] micro-batch — exposed for the replay spec. */
   def dsirIntakeBatch(batch: DataFrame, batchId: Long, modelRoot: String,
       verdictsPath: String): Unit = {
-    val s = batch.sparkSession
-    val (lam, thr) = graft.sources.IndexStore.readDsirModel(s, modelRoot)
+    val (lam, thr) = IndexStore.readDsirModel(batch.sparkSession, modelRoot)
     graft.ops.Corpus.dsirGate(batch, lam, thr)
       .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
     ()
@@ -607,34 +679,40 @@ object StreamingOps {
     * model never changes inside the stream (re-freeze is offline
     * maintenance, triggered by
     * [[graft.sources.IndexStore.pplBackoffDrift]]), so the sink is
-    * STATELESS and trivially exactly-once: a crash-replay rescoring of
-    * batch N recomputes identical verdicts and rewrites the same b=N
-    * bytes. */
+    * stateless. */
   def pplIntakeSink(incoming: DataFrame, modelRoot: String,
-      verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        pplIntakeBatch(batch, batchId, modelRoot, verdictsPath)
-      }
-      .start()
+      verdictsPath: String)(checkpoint: String): StreamingQuery =
+    foreachBatchSink(incoming, checkpoint)(
+      pplIntakeBatch(_, _, modelRoot, verdictsPath))
+
+  /** One [[pplIntakeSink]] micro-batch — exposed for the replay spec. */
+  def pplIntakeBatch(batch: DataFrame, batchId: Long, modelRoot: String,
+      verdictsPath: String): Unit = {
+    val art = IndexStore.readPpl(batch.sparkSession, modelRoot)
+    val scored = graft.ops.TermScoring.lmScoreWith(
+        batch.select(col("doc_id"), split(col("text"), " ").as("toks")),
+        art.model)
+      .select(col("doc_id"), col("lm_score"))
+      .join(graft.ops.TextAnalysis.predictedLang(batch), "doc_id")
+    graft.ops.TermScoring.bucketBy(scored, art.thresholds)
+      .orderBy(col("doc_id"))
+      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    ()
+  }
 
   /** Streaming FRONT DOOR: each micro-batch of crawl documents runs the
     * full composed admission gate — exact/near dedup triage, benchmark
-    * decontamination, perplexity bucket, DSIR cutoff — against FROZEN
-    * standing artifacts (the dedup index at `dedupRoot`, the LM gate at
-    * `pplRoot`, the DSIR model at `dsirRoot`), the streaming form of
-    * [[graft.ops.Corpus.frontDoor]]. All four gates are pure functions of
-    * (batch, artifacts) — no index append inside the stream, maintenance
-    * is offline — so the sink is STATELESS and exactly-once by replay: a
-    * crash-rerun of batch N rewrites identical b=N verdict bytes. */
+    * decontamination, perplexity bucket, DSIR cutoff, image and audio
+    * near-dup — against FROZEN standing artifacts (the dedup index at
+    * `dedupRoot`, the LM gate at `pplRoot`, the DSIR model at `dsirRoot`,
+    * the phash and audio indexes at `phashRoot` and `audioRoot`), the
+    * streaming form of [[graft.ops.Corpus.frontDoor]]. All gates are pure
+    * functions of (batch, artifacts) — no index write inside the stream,
+    * maintenance is offline — so the sink is stateless. */
   def frontDoorSink(incoming: DataFrame, dedupRoot: String,
       pplRoot: String, dsirRoot: String, phashRoot: String,
       audioRoot: String, verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.IndexStore
+      checkpoint: String): StreamingQuery = {
     // all gate artifacts are FROZEN for the stream's lifetime
     // (maintenance is offline), so load them ONCE in the sink's closure:
     // readDsirModel collects its model rows driver-side and readPpl
@@ -649,21 +727,14 @@ object StreamingOps {
     val (lam, thr) = IndexStore.readDsirModel(s, dsirRoot)
     val phash = IndexStore.readPhash(s, phashRoot)
     val audio = IndexStore.readAudioSig(s, audioRoot)
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        frontDoorBatch(batch, batchId, idx, art, lam, thr, phash, audio,
-          verdictsPath)
-      }
-      .start()
+    foreachBatchSink(incoming, checkpoint)(
+      frontDoorBatch(_, _, idx, art, lam, thr, phash, audio, verdictsPath))
   }
 
   /** One front-door micro-batch against PRE-LOADED frozen artifacts —
     * what [[frontDoorSink]] actually runs per batch. */
   private[graft] def frontDoorBatch(batch: DataFrame, batchId: Long,
-      idx: graft.sources.IndexStore.DedupIndex,
-      art: graft.sources.IndexStore.PplArtifact,
+      idx: IndexStore.DedupIndex, art: IndexStore.PplArtifact,
       lam: Array[Long], thr: Seq[(String, Long)], phashSig: DataFrame,
       audioSig: DataFrame, verdictsPath: String): Unit = {
     graft.ops.Corpus.frontDoorVerdicts(batch, idx, art, lam, thr, phashSig,
@@ -679,7 +750,6 @@ object StreamingOps {
   def frontDoorBatch(batch: DataFrame, batchId: Long, dedupRoot: String,
       pplRoot: String, dsirRoot: String, phashRoot: String,
       audioRoot: String, verdictsPath: String): Unit = {
-    import graft.sources.IndexStore
     val s = batch.sparkSession
     val (lam, thr) = IndexStore.readDsirModel(s, dsirRoot)
     frontDoorBatch(batch, batchId, IndexStore.readDedup(s, dedupRoot),
@@ -688,187 +758,38 @@ object StreamingOps {
       IndexStore.readAudioSig(s, audioRoot), verdictsPath)
   }
 
-  /** One [[pplIntakeSink]] micro-batch — exposed for the replay spec. */
-  def pplIntakeBatch(batch: DataFrame, batchId: Long, modelRoot: String,
-      verdictsPath: String): Unit = {
-    val s = batch.sparkSession
-    val art = graft.sources.IndexStore.readPpl(s, modelRoot)
-    val scored = graft.ops.TermScoring.lmScoreWith(
-        batch.select(col("doc_id"), split(col("text"), " ").as("toks")),
-        art.model)
-      .select(col("doc_id"), col("lm_score"))
-      .join(graft.ops.TextAnalysis.predictedLang(batch), "doc_id")
-    graft.ops.TermScoring.bucketBy(scored, art.thresholds)
-      .orderBy(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    ()
-  }
-
-  /** Streaming multimodal intake sink: each micro-batch of assets is
-    * triaged against the PERSISTED phash index (near/novel verdicts —
-    * the multimodal twin of [[sigIntakeSink]]), then its signatures are
-    * appended as one batch-keyed segment — so batch N+1's assets dedup
-    * against batch N's. Decode runs ONCE per asset, at intake; the index
-    * never stores payload bytes. Exactly-once by the family recipe:
-    * probes read segments `< batchId`, writes overwrite `b=<batchId>`,
-    * and the signature is a pure function of the bytes — a crash-replay
-    * rewrites identical bytes. */
-  def phashIntakeSink(incoming: DataFrame, indexPath: String,
-      verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        phashIntakeBatch(batch, batchId, indexPath, verdictsPath)
-      }
-      .start()
-
-  /** One [[phashIntakeSink]] micro-batch — exposed for the replay spec. */
-  def phashIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      verdictsPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    import s.implicits._
-    val assets = batch.as[graft.ops.Asset]
-    val standing = IndexStore.readPhashBefore(s, indexPath, batchId)
-    // triage materializes (localCheckpoint) before return, so the index
-    // append below can't change what the verdict write sees
-    val verdicts = graft.ops.Multimodal
-      .triageAssetsAgainstPhash(assets, standing)
-    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    IndexStore.appendPhashVersioned(assets, indexPath, batchId)
-    ()
-  }
-
-  /** Streaming AUDIO intake sink: each micro-batch of WAV assets is
-    * triaged against the PERSISTED audio-signature index (near/novel
-    * verdicts — the audio twin of [[phashIntakeSink]]), then its
-    * signatures append as one batch-keyed segment, so batch N+1's audio
-    * dedups against batch N's. Decode runs ONCE per asset, at intake;
-    * the index never stores payload bytes. Exactly-once by the family
-    * recipe: probes read segments `< batchId`, writes overwrite
-    * `b=<batchId>`, and the signature is a pure function of the bytes —
-    * a crash-replay rewrites identical bytes. */
-  def audioIntakeSink(incoming: DataFrame, indexPath: String,
-      verdictsPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        audioIntakeBatch(batch, batchId, indexPath, verdictsPath)
-      }
-      .start()
-
-  /** One [[audioIntakeSink]] micro-batch — exposed for the replay spec. */
-  def audioIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      verdictsPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    import s.implicits._
-    val assets = batch.as[graft.ops.Asset]
-    val standing = IndexStore.readAudioSigBefore(s, indexPath, batchId)
-    // triage materializes (localCheckpoint) before return, so the index
-    // append below can't change what the verdict write sees
-    val verdicts = graft.ops.AudioDedup
-      .triageAssetsAgainstAudioSig(assets, standing)
-    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    IndexStore.appendAudioSigVersioned(assets, indexPath, batchId)
-    ()
-  }
-
-  /** One [[sigIntakeSink]] micro-batch — exposed for the replay spec. */
-  def sigIntakeBatch(batch: DataFrame, batchId: Long, indexPath: String,
-      verdictsPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    val standing = IndexStore.readSigBefore(s, indexPath, batchId)
-    // triage materializes (localCheckpoint) before return, so the index
-    // append below can't change what the verdict write sees
-    val verdicts = graft.ops.Similarity.triageVectorsAgainstSig(
-      batch, standing)
-    verdicts.write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    IndexStore.appendSigVersioned(batch, indexPath, batchId)
-    ()
-  }
-
-  /** One [[annIntakeSink]] micro-batch — exposed for the replay spec. */
-  def annIntakeBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-      neighborsPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    val cs = IndexStore.readAnnCentroids(s, indexRoot)
-    val standing = IndexStore.readAnnCellsBefore(s, indexRoot, batchId)
-    val q = graft.ops.Similarity.embeddedOf(batch)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"),
-        col("nrm").as("qn"))
-    // selfExclude=false: the incoming batch's vec_ids are a different id
-    // space from the standing index — an id collision must not drop a
-    // legitimate standing neighbor
-    val neighbors = graft.ops.Similarity
-      .ivfProbeQueries(q, standing, cs, graft.ops.Similarity.AnnK,
-        graft.ops.Similarity.IvfProbe, pruneCells = true,
-        selfExclude = false)
-    // materialize before the index append below can extend the cells view
-    neighbors.write.mode("overwrite").parquet(s"$neighborsPath/b=$batchId")
-    IndexStore.appendAnnVersioned(batch, indexRoot, batchId)
-    ()
-  }
-
-  /** One [[triageSink]] micro-batch — exposed for the replay spec. */
-  def triageBatch(batch: DataFrame, batchId: Long, indexRoot: String,
-      verdictPath: String): Unit = {
-    import graft.sources.IndexStore
-    val s = batch.sparkSession
-    val verdicts = graft.ops.Dedup.triageAgainstIndex(batch,
-      IndexStore.readDedupBefore(s, indexRoot, batchId))
-      .localCheckpoint(true) // pin: consumed by the write and the novel join
-    verdicts.write.mode("overwrite").parquet(s"$verdictPath/b=$batchId")
-    val novel = batch.join(
-      verdicts.filter(col("verdict") === "novel").select(col("doc_id")),
-      "doc_id")
-    IndexStore.appendDedupVersioned(novel, indexRoot, batchId)
-    ()
-  }
-
   /** CDC-style streaming upsert sink: a stream of (key, op, payload)
-    * change rows maintains a keyed snapshot table via foreachBatch +
+    * change rows maintains a keyed snapshot table via
     * [[graft.ops.Upsert.merge]] — each micro-batch is one MERGE applied
     * in arrival order, so the maintained table always equals the batch
     * fold of every batch seen so far (the equivalence Round4Spec proves
     * for [[graft.ops.Upsert.readView]]).
     *
-    * foreachBatch is the right tool, not a custom sink: the merge needs
-    * to READ the current snapshot, which a StreamingWrite cannot.
-    * Micro-batch replays after a crash re-run the merge on the same
-    * batch — idempotent for this fold (delete/update of an applied batch
-    * re-applies to the same end state; insert behaves as upsert by
-    * design), which is the standard exactly-once-effect argument for
-    * foreachBatch sinks. At scale the snapshot rewrite inside each batch
-    * becomes the merge-on-read append ([[graft.ops.Upsert.readView]]) —
-    * same per-batch dataflow, O(delta) writes. */
+    * A micro-batch sink is the right tool, not a custom sink: the merge
+    * needs to READ the current snapshot, which a StreamingWrite cannot.
+    * A replayed batch re-runs the merge on the same rows — idempotent for
+    * this fold (delete/update of an applied batch re-applies to the same
+    * end state; insert behaves as upsert by design). At scale the
+    * snapshot rewrite inside each batch becomes the merge-on-read append
+    * ([[graft.ops.Upsert.readView]]) — same per-batch dataflow, O(delta)
+    * writes. */
   def upsertSink(changes: DataFrame, store: graft.collab.TableStore,
       table: String, key: String, payload: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snapshot = store.scan(table).select(col(key), col(payload))
-        // localCheckpoint(eager): materialize the merge DISTRIBUTED (pinned
-        // on executors) before truncate deletes the files it was read from
-        // — no driver funnel. A cluster deployment hardens the swap into a
-        // versioned-directory flip (or the MOR delta append) so an
-        // executor loss mid-swap cannot drop pinned blocks.
-        val merged = graft.ops.Upsert
-          .merge(snapshot, batch, key, payload)
-          .select(col(key), col(payload))
-          .localCheckpoint(true)
-        store.truncate(table)
-        store.append(table, merged)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    foreachBatchSink(changes, checkpoint) { (batch, _) =>
+      val snapshot = store.scan(table).select(col(key), col(payload))
+      // localCheckpoint(eager): materialize the merge DISTRIBUTED (pinned
+      // on executors) before truncate deletes the files it was read from
+      // — no driver funnel. A cluster deployment hardens the swap into a
+      // versioned-directory flip (or the MOR delta append) so an
+      // executor loss mid-swap cannot drop pinned blocks.
+      val merged = graft.ops.Upsert
+        .merge(snapshot, batch, key, payload)
+        .select(col(key), col(payload))
+        .localCheckpoint(true)
+      store.truncate(table)
+      store.append(table, merged)
+    }
 
   /** Merge-on-read CDC sink — the scale-honest variant of [[upsertSink]]:
     * each micro-batch APPENDS to the delta-log table (an O(delta)
@@ -879,25 +800,20 @@ object StreamingOps {
     * [[graft.ops.Upsert.compact]] folds the log back into base when it
     * outgrows its read amortization. Batch replays after a crash would
     * re-append; dedup by `__batch` (max-applied watermark or a
-    * read-side `dropDuplicates(key, op, __batch)`) is the standard
-    * foreachBatch idempotence recipe — the spec pins normal-path
-    * semantics. */
+    * read-side `dropDuplicates(key, op, __batch)`) restores
+    * idempotence — the spec pins normal-path semantics. */
   def upsertSinkMor(changes: DataFrame, store: graft.collab.TableStore,
       deltaTable: String, key: String, payload: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // __seq persists intra-batch arrival order durably: without it,
-        // same-key ops inside one micro-batch would tie on __batch in the
-        // read view's fold and replay in an order the source never saw
-        store.append(deltaTable,
-          batch.select(col(key), col("op"), col(payload),
-            lit(batchId).cast("long").as("__batch"),
-            monotonically_increasing_id().as("__seq")))
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    foreachBatchSink(changes, checkpoint) { (batch, batchId) =>
+      // __seq persists intra-batch arrival order durably: without it,
+      // same-key ops inside one micro-batch would tie on __batch in the
+      // read view's fold and replay in an order the source never saw
+      store.append(deltaTable,
+        batch.select(col(key), col("op"), col(payload),
+          lit(batchId).cast("long").as("__batch"),
+          monotonically_increasing_id().as("__seq")))
+    }
 
   /** Streaming incremental-aggregate-view sink: an event stream maintains
     * the per-user stats view ([[graft.ops.ViewMaintain.viewOf]]) as a
@@ -905,24 +821,19 @@ object StreamingOps {
     * partial aggregate into the latest committed version and writes
     * `v=<batchId>` ([[graft.ops.ViewMaintain.applyViewBatch]]).
     *
-    * Exactly-once effect WITHOUT a dedup column: the merge reads only
-    * versions strictly older than the current batch id, so a
-    * crash-replay of batch N deterministically rewrites the same
-    * `v=N` bytes — the version flip is the idempotence mechanism, and
-    * readers never observe a half-swapped view (they list committed
-    * versions, same discipline as a transaction-log table format; old
-    * versions double as time travel until compacted). The streaming twin
-    * of q_incr_agg: after any prefix of batches, the newest version
-    * equals the batch aggregate of every event seen so far. */
+    * Exactly-once WITHOUT a dedup column: the merge reads only versions
+    * strictly older than the current batch id, so a replay of batch N
+    * deterministically rewrites the same `v=N` bytes — the version flip is
+    * the idempotence mechanism, and readers never observe a half-swapped
+    * view (they list committed versions, same discipline as a
+    * transaction-log table format; old versions double as time travel
+    * until compacted). The streaming twin of q_incr_agg: after any prefix
+    * of batches, the newest version equals the batch aggregate of every
+    * event seen so far. */
   def aggViewSink(events: DataFrame, viewRoot: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.ViewMaintain.applyViewBatch(batch, viewRoot, batchId)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    foreachBatchSink(events, checkpoint)(
+      graft.ops.ViewMaintain.applyViewBatch(_, viewRoot, _))
 
   /** Read the reconciled view of a base + MOR delta-log pair maintained
     * by [[upsertSinkMor]]: the log (already batch-stamped) folds per key
@@ -947,3 +858,4 @@ object StreamingOps {
       store.scan(deltaTable).filter(col("__batch") <= maxBatch),
       key, payload)
 }
+

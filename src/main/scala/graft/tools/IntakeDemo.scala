@@ -18,11 +18,12 @@ object IntakeDemo {
     import spark.implicits._
     import graft.ops.{Dedup, Tables, TextAnalysis}
     import graft.sources.IndexStore
+    import graft.sources.IndexStore.WriteMode.{Append, Build}
 
     val standing = Tables.documents(spark, dir)
     val root = java.nio.file.Files.createTempDirectory("intake-demo").toString
     val idx = s"$root/dedup"
-    IndexStore.buildDedup(standing, idx)
+    IndexStore.writeDedup(standing, idx, Build)
     val nDigests = IndexStore.readDedup(spark, idx).digests.count()
     println(f"standing corpus:      ${standing.count()}%6d docs, $nDigests%6d digests indexed")
 
@@ -46,7 +47,7 @@ object IntakeDemo {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val novel = batch.join(
         verdicts.filter($"verdict" === "novel").select($"doc_id"), "doc_id")
-      IndexStore.appendDedup(novel, idx)
+      IndexStore.writeDedup(novel, idx, Append)
       println(f"batch ${i + 1}: ${b.size}%2d docs -> " +
         f"${counts.getOrElse("novel", 0L)}%d novel / " +
         f"${counts.getOrElse("near", 0L)}%d near / " +

@@ -32,7 +32,7 @@ object MaintenanceDemo {
     val newVocab = (0 until 400).map(i =>
       (50000L + i, (0 until 40).map(j => s"zx${(i * 11 + j) % 120}").mkString(" ")))
       .toDF("doc_id", "text")
-    IndexStore.appendPrefix(newVocab, pfx)
+    IndexStore.writePrefix(newVocab, pfx, IndexStore.WriteMode.Append)
     val pd = IndexStore.prefixFreqDrift(spark, pfx)
     println(f"prefix  drift drifted: $pd%.4f" +
       s"  maintain(0.2) -> ${IndexStore.maintainPrefix(spark, pfx, 0.2)}" +
@@ -44,12 +44,13 @@ object MaintenanceDemo {
     val o0 = IndexStore.annCellOccupancy(spark, ann)
     println(f"ann     skew fresh:    ${o0.skew}%.2f (max ${o0.maxCell} / mean ${o0.meanCell}%.1f)" +
       s"  maintain(x2) -> ${IndexStore.maintainAnn(spark, ann, o0.skew * 2)}")
-    val hot = IndexStore.readAnnCells(spark, ann)
+    val hot = IndexStore.readAnn(spark, ann).cells
       .groupBy(col("cell")).count().orderBy(col("count").desc).first().getInt(0)
-    val hotVecs = emb.join(IndexStore.readAnnCells(spark, ann)
+    val hotVecs = emb.join(IndexStore.readAnn(spark, ann).cells
       .filter(col("cell") === hot).select(col("vec_id")), "vec_id")
-    (1 to 5).foreach(i => IndexStore.appendAnn(
-      hotVecs.withColumn("vec_id", col("vec_id") + lit(1000000L * i)), ann))
+    (1 to 5).foreach(i => IndexStore.writeAnn(
+      hotVecs.withColumn("vec_id", col("vec_id") + lit(1000000L * i)), ann,
+      IndexStore.WriteMode.Append))
     val o1 = IndexStore.annCellOccupancy(spark, ann)
     println(f"ann     skew drifted:  ${o1.skew}%.2f" +
       s"  maintain(mid) -> ${IndexStore.maintainAnn(spark, ann, (o0.skew + o1.skew) / 2)}" +

@@ -6,8 +6,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-level rules for `src/main`: every entry point gets its session
-  * from [[Session]], the only env knobs are the declared contract, and
-  * session- or application-keyed state lives only in [[State]]. */
+  * from [[Session]], the only env knobs are the declared contract,
+  * session- or application-keyed state lives only in [[State]], and the
+  * standing indexes and streaming sinks express their variants as
+  * parameters, not as copies. */
 class SourceScanSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -45,5 +47,22 @@ class SourceScanSpec extends AnyFunSuite {
     }
     assert(sites.forall(_.startsWith("graft/State.scala: ")), sites)
     assert(sites.nonEmpty, "the registry itself must be found")
+  }
+
+  test("src/main starts a foreachBatch stream at exactly one site, in " +
+      "StreamingOps") {
+    val sites = sources.flatMap { case (p, src) =>
+      Seq.fill("""\.foreachBatch\b""".r.findAllMatchIn(src).size)(
+        main.relativize(p).toString)
+    }
+    assert(sites === Seq("graft/streaming/StreamingOps.scala"))
+  }
+
+  test("IndexStore defines no batch-keyed or read-bounded twin of a " +
+      "writer or reader") {
+    val src = Files.readString(main.resolve("graft/sources/IndexStore.scala"))
+    val twins = """def \w+Versioned|def read\w+Before""".r
+      .findAllMatchIn(src).map(_.matched).toList
+    assert(twins === Nil)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.sources.IndexStore
+import graft.sources.IndexStore.WriteMode.{Append, Build}
 
 /** The persisted ANN standing index (IndexStore.buildAnn/appendAnn) and
   * the operators that consume it: frozen-centroid appends, O(delta)
@@ -69,8 +70,8 @@ class AnnIndexSpec extends SparkSpec {
     val st = asTable(emb.filter(col("vec_id") % 5 =!= 0), standingDir)
     val dl = asTable(emb.filter(col("vec_id") % 5 === 0), deltaDir)
     val root = tmp("sig-idx") + "/sig"
-    IndexStore.buildSig(st, root)
-    val appended = IndexStore.appendSig(dl, root)
+    IndexStore.writeSig(st, root, Build)
+    val appended = IndexStore.writeSig(dl, root, Append)
     assert(appended.inputFiles.nonEmpty &&
       appended.inputFiles.forall(_.contains(deltaDir)),
       "append must read the delta only")
@@ -80,7 +81,7 @@ class AnnIndexSpec extends SparkSpec {
     val grown = sigSet(IndexStore.readSig(spark, root))
     val rebuilt = {
       val r2 = tmp("sig-idx2") + "/sig"
-      IndexStore.buildSig(emb, r2)
+      IndexStore.writeSig(emb, r2, Build)
       sigSet(IndexStore.readSig(spark, r2))
     }
     assert(grown === rebuilt,
@@ -96,7 +97,7 @@ class AnnIndexSpec extends SparkSpec {
 
     val root = tmp("ann-idx")
     IndexStore.buildAnn(standing, root)
-    val appended = IndexStore.appendAnn(delta, root)
+    val appended = IndexStore.writeAnn(delta, root, Append)
 
     val inputs = appended.inputFiles
     assert(inputs.nonEmpty)
@@ -111,10 +112,10 @@ class AnnIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, dir)
     val root = tmp("ann-idx-eq")
     IndexStore.buildAnn(emb.filter(col("vec_id") % 5 =!= 0), root)
-    IndexStore.appendAnn(emb.filter(col("vec_id") % 5 === 0), root)
+    IndexStore.writeAnn(emb.filter(col("vec_id") % 5 === 0), root, Append)
 
-    val cs = IndexStore.readAnnCentroids(spark, root)
-    val fromIndex = IndexStore.readAnnCells(spark, root)
+    val cs = IndexStore.readAnn(spark, root).centroids
+    val fromIndex = IndexStore.readAnn(spark, root).cells
       .select(col("vec_id"), col("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val direct = Similarity.assignCells(Similarity.embeddedOf(emb), cs)
@@ -142,15 +143,15 @@ class AnnIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, dir)
     val root = tmp("ann-idx-pq")
     IndexStore.buildAnn(emb.filter(col("vec_id") % 5 =!= 0), root)
-    IndexStore.appendAnn(emb.filter(col("vec_id") % 5 === 0), root)
+    IndexStore.writeAnn(emb.filter(col("vec_id") % 5 === 0), root, Append)
 
-    val cs = IndexStore.readAnnCentroids(spark, root)
-    val cbs = IndexStore.readAnnCodebooks(spark, root)
+    val cs = IndexStore.readAnn(spark, root).centroids
+    val cbs = IndexStore.readAnn(spark, root).codebooks
     assert(cbs.length === Similarity.PqM)
     assert(cbs.forall(_.length === Similarity.PqCodes))
     def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.toSeq.drop(1).toList).toMap
-    val fromIndex = keyed(IndexStore.readAnnCodes(spark, root)
+    val fromIndex = keyed(IndexStore.readAnn(spark, root).codes
       .select(col("vec_id") +: (0 until Similarity.PqM)
         .map(j => col(s"code_$j")): _*))
     val direct = keyed(Similarity.encodePq(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.IndexStore.WriteMode.{Append, Build}
 import org.apache.spark.sql.functions._
 
 /** Audio near-dup family (r15): decode exactness through the real
@@ -155,8 +156,9 @@ class AudioDedupSpec extends SparkSpec {
     val deltaAssets = AudioDedup.wavAssetsOf(spark.read.parquet(deltaDir))
     val root = java.nio.file.Files
       .createTempDirectory("audio-idx").toString + "/audiosig"
-    graft.sources.IndexStore.buildAudioSig(exA, root)
-    val appended = graft.sources.IndexStore.appendAudioSig(deltaAssets, root)
+    graft.sources.IndexStore.writeAudioSig(exA, root, Build)
+    val appended = graft.sources.IndexStore.writeAudioSig(deltaAssets, root,
+      Append)
     assert(appended.inputFiles.nonEmpty &&
       appended.inputFiles.forall(_.contains(deltaDir)),
       "append must read the delta only")

@@ -139,6 +139,27 @@ class DsirSpec extends SparkSpec {
     assert(rows(s"$verdicts/b=1") == v1)
   }
 
+
+  test("streaming dsir intake sink: two micro-batches on a stream write " +
+      "the verdicts the direct batch calls write") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("dsir-sink").toString
+    val modelRoot = s"$base/model"
+    val (lam, thr) = Corpus.dsirStandingFit(spark, dir)
+    graft.sources.IndexStore.buildDsirModel(spark, lam, thr, modelRoot)
+    val (delta, _) = Dedup.deltaSplit(sf("documents", dir))
+    val batches = Seq(delta.filter($"doc_id" % 2 === 0),
+      delta.filter($"doc_id" % 2 === 1))
+    runSink(batches: _*)(graft.streaming.StreamingOps.dsirIntakeSink(_,
+      modelRoot, s"$base/stream")(s"$base/ckpt"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.StreamingOps.dsirIntakeBatch(b, i.toLong, modelRoot,
+        s"$base/direct")
+    }
+    assert(rowsUnder(s"$base/stream").nonEmpty)
+    assert(rowsUnder(s"$base/stream") === rowsUnder(s"$base/direct"))
+  }
+
   test("bucket drift: zero on the fit corpus, detects a vocabulary shift, " +
       "refit restores it") {
     import spark.implicits._

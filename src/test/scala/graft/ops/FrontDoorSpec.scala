@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.IndexStore.WriteMode.Build
 import org.apache.spark.sql.functions._
 
 /** Round-13 flagship: the composed intake front door (corpus_front_door)
@@ -249,7 +250,7 @@ class FrontDoorSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("front-door").toString
     val docs = sf("documents", dir)
     val (delta, standing) = Dedup.deltaSplit(docs)
-    IndexStore.buildDedup(standing, s"$base/dedup")
+    IndexStore.writeDedup(standing, s"$base/dedup", Build)
     val h = graft.functions.SharedHash.spark48("cast(doc_id AS string)")
     IndexStore.buildPpl(docs.filter(expr(s"pmod($h, 10)") < 8), s"$base/ppl",
       thrDocs = Some(docs.filter(
@@ -257,10 +258,10 @@ class FrontDoorSpec extends SparkSpec {
     val (lam, thr) = Corpus.dsirStandingFit(spark, dir)
     IndexStore.buildDsirModel(spark, lam, thr, s"$base/dsir")
     // gate 5's frozen artifact: the standing assets' phash signatures
-    IndexStore.buildPhash(Multimodal.assetsOf(standing), s"$base/phash")
+    IndexStore.writePhash(Multimodal.assetsOf(standing), s"$base/phash", Build)
     // gate 7's frozen artifact: the standing assets' audio fingerprints
-    IndexStore.buildAudioSig(AudioDedup.wavAssetsOf(standing),
-      s"$base/audio")
+    IndexStore.writeAudioSig(AudioDedup.wavAssetsOf(standing),
+      s"$base/audio", Build)
     val verdicts = s"$base/verdicts"
     val b1 = delta.filter($"doc_id" % 2 === 0)
     val b2 = delta.filter($"doc_id" % 2 === 1)
@@ -287,5 +288,38 @@ class FrontDoorSpec extends SparkSpec {
       b1, 1L, s"$base/dedup", s"$base/ppl", s"$base/dsir", s"$base/phash",
       s"$base/audio", verdicts)
     assert(rows(s"$verdicts/b=1") == v1)
+  }
+
+  test("streaming front door sink: two micro-batches on a stream write " +
+      "the verdicts the direct batch calls write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("front-sink").toString
+    val docs = sf("documents", dir)
+    val (delta, standing) = Dedup.deltaSplit(docs)
+    IndexStore.writeDedup(standing, s"$base/dedup", Build)
+    val h = graft.functions.SharedHash.spark48("cast(doc_id AS string)")
+    IndexStore.buildPpl(docs.filter(expr(s"pmod($h, 10)") < 8), s"$base/ppl",
+      thrDocs = Some(docs.filter(
+        expr(s"pmod($h, 10)") === Corpus.FrontDoorBenchBucket)))
+    val (lam, thr) = Corpus.dsirStandingFit(spark, dir)
+    IndexStore.buildDsirModel(spark, lam, thr, s"$base/dsir")
+    IndexStore.writePhash(Multimodal.assetsOf(standing), s"$base/phash",
+      Build)
+    IndexStore.writeAudioSig(AudioDedup.wavAssetsOf(standing),
+      s"$base/audio", Build)
+    val roots = Seq("dedup", "ppl", "dsir", "phash", "audio")
+      .map(r => s"$base/$r")
+    val batches = Seq(delta.filter($"doc_id" % 2 === 0),
+      delta.filter($"doc_id" % 2 === 1))
+    runSink(batches: _*)(graft.streaming.StreamingOps.frontDoorSink(_,
+      roots(0), roots(1), roots(2), roots(3), roots(4),
+      s"$base/stream")(s"$base/ckpt"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.StreamingOps.frontDoorBatch(b, i.toLong, roots(0),
+        roots(1), roots(2), roots(3), roots(4), s"$base/direct")
+    }
+    assert(rowsUnder(s"$base/stream").nonEmpty)
+    assert(rowsUnder(s"$base/stream") === rowsUnder(s"$base/direct"))
   }
 }

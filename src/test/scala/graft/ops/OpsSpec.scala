@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.IndexStore.WriteMode.{Append, Build}
 import graft.ops.Similarity.BandGeometry
 import org.apache.spark.sql.functions._
 
@@ -1000,8 +1001,8 @@ class TextMultimodalSpec extends SparkSpec {
         col("text").cast("binary").as("content")).as[Asset]
     val root = java.nio.file.Files
       .createTempDirectory("phash-idx").toString + "/phash"
-    graft.sources.IndexStore.buildPhash(exA, root)
-    val appended = graft.sources.IndexStore.appendPhash(deltaAssets, root)
+    graft.sources.IndexStore.writePhash(exA, root, Build)
+    val appended = graft.sources.IndexStore.writePhash(deltaAssets, root, Append)
     assert(appended.inputFiles.nonEmpty &&
       appended.inputFiles.forall(_.contains(deltaDir)),
       "append must read the delta only")

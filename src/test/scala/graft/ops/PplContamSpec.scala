@@ -166,6 +166,26 @@ class PplContamSpec extends SparkSpec {
     assert(rows(s"$verdicts/b=1") == v1)
   }
 
+
+  test("streaming ppl intake sink: two micro-batches on a stream write " +
+      "the verdicts the direct batch calls write") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("ppl-sink").toString
+    val modelRoot = s"$base/model"
+    val (delta, standing) = Dedup.deltaSplit(sf("documents", dir))
+    graft.sources.IndexStore.buildPpl(standing, modelRoot)
+    val batches = Seq(delta.filter($"doc_id" % 2 === 0),
+      delta.filter($"doc_id" % 2 === 1))
+    runSink(batches: _*)(graft.streaming.StreamingOps.pplIntakeSink(_,
+      modelRoot, s"$base/stream")(s"$base/ckpt"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.streaming.StreamingOps.pplIntakeBatch(b, i.toLong, modelRoot,
+        s"$base/direct")
+    }
+    assert(rowsUnder(s"$base/stream").nonEmpty)
+    assert(rowsUnder(s"$base/stream") === rowsUnder(s"$base/direct"))
+  }
+
   test("backoff drift: zero on the fit corpus, detects new vocabulary, " +
       "re-freeze restores it") {
     import spark.implicits._

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.sources.IndexStore.WriteMode.Append
 import org.apache.spark.sql.functions._
 
 /** Round-6 close-out additions: prefix-filtered exact similarity join,
@@ -283,8 +284,8 @@ class Round6ExtrasSpec extends SparkSpec {
     val delta = craftedDocs.filter(col("doc_id") % 5 === 0)
 
     graft.sources.IndexStore.buildPrefix(spark.read.parquet(s1p), idxInc)
-    val appended = graft.sources.IndexStore.appendPrefix(
-      spark.read.parquet(s2p), idxInc)
+    val appended = graft.sources.IndexStore.writePrefix(
+      spark.read.parquet(s2p), idxInc, Append)
     // O(delta): the appended rows derive from the delta parquet + the
     // frozen dictionary — never the standing batch's files
     assert(appended.inputFiles.nonEmpty)
@@ -307,7 +308,7 @@ class Round6ExtrasSpec extends SparkSpec {
     ViewMaintain.applyViewBatch(batch(1L -> 0.5), root, 1)
     ViewMaintain.applyViewBatch(batch(3L -> 4.0), root, 2)
     ViewMaintain.compactViews(spark, root, keep = 1)
-    assert(ViewMaintain.viewVersions(spark, root) == Seq(2L))
+    assert(Tables.versions(spark, root, "v") == Seq(2L))
     val got = spark.read.parquet(s"$root/v=2").orderBy(col("user_id"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((1L, 2L, 1500000L), (2L, 1L, 2000000L),

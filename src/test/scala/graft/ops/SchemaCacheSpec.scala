@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.IndexStore.WriteMode.Build
 
 /** The schema-inference cache's rebuild guard (r16 verdict #8): the cache
   * assumes "a path's schema cannot change under a session"; the one class
@@ -41,7 +42,7 @@ class SchemaCacheSpec extends SparkSpec {
     val docs = Seq((10L, "alpha beta gamma delta epsilon zeta eta theta"),
       (11L, "one two three four five six seven eight nine ten"))
       .toDF("doc_id", "text")
-    graft.sources.IndexStore.buildDedup(docs, root)
+    graft.sources.IndexStore.writeDedup(docs, root, Build)
     val idx = graft.sources.IndexStore.readDedup(spark, root)
     assert(idx.digests.columns.toSeq === Seq("doc_id", "fp"))
     assert(idx.digests.count() === 2L)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ops.{Dedup, Tables, TextAnalysis}
+import graft.sources.IndexStore.WriteMode.{Append, Build}
 
 /** The persisted standing-index contract: append is delta-proportional
   * (the standing corpus is NOT an input of an append), the appended index
@@ -35,8 +36,8 @@ class IndexStoreSpec extends SparkSpec {
     val delta = asTable(docs.filter(col("doc_id") % 5 === 0), deltaDir)
 
     val idxPath = tmp("idx-winnow") + "/fp"
-    IndexStore.buildWinnow(standing, idxPath)
-    val appended = IndexStore.appendWinnow(delta, idxPath)
+    IndexStore.writeWinnow(standing, idxPath, Build)
+    val appended = IndexStore.writeWinnow(delta, idxPath, Append)
 
     // the load-bearing claim: the appended rows' lineage reads the delta
     // table only — O(delta) maintenance however large the standing corpus
@@ -54,11 +55,11 @@ class IndexStoreSpec extends SparkSpec {
     val delta = docs.filter(col("doc_id") % 5 === 0)
 
     val incremental = tmp("idx-winnow-inc") + "/fp"
-    IndexStore.buildWinnow(standing, incremental)
-    IndexStore.appendWinnow(delta, incremental)
+    IndexStore.writeWinnow(standing, incremental, Build)
+    IndexStore.writeWinnow(delta, incremental, Append)
 
     val rebuilt = tmp("idx-winnow-full") + "/fp"
-    IndexStore.buildWinnow(docs, rebuilt)
+    IndexStore.writeWinnow(docs, rebuilt, Build)
 
     assert(sortedRows(IndexStore.readWinnow(spark, incremental)) ===
       sortedRows(IndexStore.readWinnow(spark, rebuilt)))
@@ -72,8 +73,8 @@ class IndexStoreSpec extends SparkSpec {
     val delta = asTable(docs.filter(col("doc_id") % 5 === 0), deltaDir)
 
     val root = tmp("idx-dedup")
-    IndexStore.buildDedup(standing, root)
-    val parts = IndexStore.appendDedup(delta, root)
+    IndexStore.writeDedup(standing, root, Build)
+    val parts = IndexStore.writeDedup(delta, root, Append)
 
     for ((name, df) <- Seq("digests" -> parts.digests,
         "bands" -> parts.bands, "shingles" -> parts.shingles)) {
@@ -89,11 +90,11 @@ class IndexStoreSpec extends SparkSpec {
     val delta = docs.filter(col("doc_id") % 5 === 0)
 
     val inc = tmp("idx-dedup-inc")
-    IndexStore.buildDedup(standing, inc)
-    IndexStore.appendDedup(delta, inc)
+    IndexStore.writeDedup(standing, inc, Build)
+    IndexStore.writeDedup(delta, inc, Append)
 
     val full = tmp("idx-dedup-full")
-    IndexStore.buildDedup(docs, full)
+    IndexStore.writeDedup(docs, full, Build)
 
     val a = IndexStore.readDedup(spark, inc)
     val b = IndexStore.readDedup(spark, full)
@@ -169,8 +170,8 @@ class IndexStoreSpec extends SparkSpec {
     val added = Tables.documents(spark, dir).filter(col("doc_id") % 7 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(lit("appended "), col("text")).as("text"))
-    val appended = IndexStore.appendDedup(added,
-      IndexStore.dedupRoot(spark, corpus))
+    val appended = IndexStore.writeDedup(added,
+      IndexStore.dedupRoot(spark, corpus), Append)
     val newDigests = sortedRows(appended.digests)
     assert(newDigests.nonEmpty)
 

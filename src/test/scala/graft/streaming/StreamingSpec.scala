@@ -3,6 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import graft.ops.Tables
+import graft.sources.IndexStore.WriteMode.{Append, Build}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -325,7 +327,7 @@ class StreamingSpec extends SparkSpec {
     val standing = graft.ops.Tables.documents(spark, dir)
     val idx = java.nio.file.Files
       .createTempDirectory("curation-idx").toString + "/fp"
-    IndexStore.buildCurationDigests(standing, idx)
+    IndexStore.writeCurationDigests(standing, idx, Build)
 
     val novelText = "a document the corpus has never seen"
     val incoming = Seq(
@@ -361,8 +363,8 @@ class StreamingSpec extends SparkSpec {
       .createTempDirectory("curation-delta").toString + "/batch"
     Seq((9100L, novelText)).toDF("doc_id", "text")
       .write.parquet(deltaDir)
-    val appended = IndexStore.appendCurationDigests(
-      spark.read.parquet(deltaDir), idx)
+    val appended = IndexStore.writeCurationDigests(
+      spark.read.parquet(deltaDir), idx, Append)
     assert(appended.inputFiles.forall(_.contains(deltaDir)),
       "append reads only the delta batch")
     // the same stream now triages the formerly-novel doc as a duplicate
@@ -380,7 +382,7 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("intake").toString
     val idx = s"$base/idx"
     val accepted = s"$base/accepted"
-    IndexStore.buildCurationDigests(standing, idx)
+    IndexStore.writeCurationDigests(standing, idx, Build)
 
     val standingDoc = standing.select($"doc_id", $"text")
       .as[(Long, String)].head()
@@ -415,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     val standing = graft.ops.Tables.documents(spark, dir)
     val base = java.nio.file.Files.createTempDirectory("intake-rs").toString
     val idx = s"$base/idx"
-    IndexStore.buildCurationDigests(standing, idx)
+    IndexStore.writeCurationDigests(standing, idx, Build)
     val input = MemoryStream[(Long, String)]
     def start() = StreamingOps.intakeSink(
       input.toDF().toDF("doc_id", "text"), idx, s"$base/accepted")(
@@ -451,7 +453,7 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("intake-replay").toString
     val idx = s"$base/idx"
     val accepted = s"$base/accepted"
-    IndexStore.buildCurationDigests(standing, idx)
+    IndexStore.writeCurationDigests(standing, idx, Build)
 
     val batch = Seq((9500L, "novel doc whose batch will be replayed"),
       (9501L, "second novel doc in the replayed batch")).toDF("doc_id", "text")
@@ -483,7 +485,7 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("triage-replay").toString
     val idx = s"$base/idx"
     val verdicts = s"$base/verdicts"
-    IndexStore.buildDedup(standing, idx)
+    IndexStore.writeDedup(standing, idx, Build)
 
     val novel = (1 to 40).map(i => s"rtok$i").mkString(" ")
     val batch = Seq((9600L, novel)).toDF("doc_id", "text")
@@ -539,6 +541,37 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/freq").count() === freqBefore)
   }
 
+
+  test("streaming prefix intake sink: two micro-batches on a stream write " +
+      "the pairs and index segments the direct batch calls write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("pfx-sink").toString
+    def toks(p: String) = (1 to 40).map(i => s"$p$i")
+    val standing = Seq((100L, toks("ptok").mkString(" ")),
+      (101L, toks("ztok").mkString(" "))).toDF("doc_id", "text")
+    val b1 = Seq(
+      (200L, (toks("ptok").dropRight(2) ++ Seq("chgA", "chgB")).mkString(" ")),
+      (201L, toks("qtok").mkString(" "))).toDF("doc_id", "text")
+    val b2 = Seq(
+      (300L, (toks("qtok").dropRight(2) ++ Seq("chgC", "chgD")).mkString(" ")))
+      .toDF("doc_id", "text")
+    Seq("stream", "direct").foreach(a =>
+      IndexStore.buildPrefix(standing, s"$base/$a/idx"))
+    runSink(b1, b2)(StreamingOps.prefixIntakeSink(_, s"$base/stream/idx",
+      s"$base/stream/pairs")(s"$base/ckpt"))
+    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.prefixIntakeBatch(b, i.toLong, s"$base/direct/idx",
+        s"$base/direct/pairs")
+    }
+    assert(rowsUnder(s"$base/stream/pairs").size === 2)
+    assert(rowsUnder(s"$base/stream/pairs") ===
+      rowsUnder(s"$base/direct/pairs"))
+    def sets(a: String) = IndexStore.readPrefix(spark, s"$base/$a/idx",
+      Some(2L)).sets.collect().map(_.toString).sorted.toSeq
+    assert(sets("stream") === sets("direct"))
+  }
+
   test("streaming ANN intake: incoming vectors probe the standing index, " +
       "cross-batch recall via in-loop appends, crash-replay idempotent") {
     import spark.implicits._
@@ -563,7 +596,7 @@ class StreamingSpec extends SparkSpec {
     StreamingOps.annIntakeBatch(b1.toDF(), 1L, idx, nbrs)
     assert(nbrRows(1L).map(_.toString).sorted.toSeq ===
       n1.map(_.toString).sorted.toSeq)
-    assert(IndexStore.readAnnCellsBefore(spark, idx, 2L).count() === 320)
+    assert(IndexStore.readAnn(spark, idx, Some(2L)).cells.count() === 320)
 
     // batch 2 = exact copies of batch 1's vectors under new ids: the twin
     // appended by batch 1 must surface at cosine 1.0 — cross-batch recall
@@ -577,8 +610,33 @@ class StreamingSpec extends SparkSpec {
         r.getDouble(3) === 1.0), s"twin of $q not found at sim 1.0")
     }
     // the PQ code segments follow the same versioned lifecycle
-    assert(IndexStore.readWithDeltasBefore(spark, s"$idx/codes", 3L)
+    assert(IndexStore.readAnn(spark, idx, Some(3L)).codes
       .count() === 340)
+  }
+
+
+  test("streaming ANN intake sink: two micro-batches on a stream write the " +
+      "neighbors and index segments the direct batch calls write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("ann-sink").toString
+    val emb = graft.ops.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    Seq("stream", "direct").foreach(a =>
+      IndexStore.buildAnn(emb.filter($"vec_id" < 300), s"$base/$a/idx"))
+    val b1 = emb.filter($"vec_id" >= 300 && $"vec_id" < 320)
+    val b2 = b1.withColumn("vec_id", $"vec_id" + 1000L)
+    runSink(b1, b2)(StreamingOps.annIntakeSink(_, s"$base/stream/idx",
+      s"$base/stream/nbrs")(s"$base/ckpt"))
+    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.annIntakeBatch(b, i.toLong, s"$base/direct/idx",
+        s"$base/direct/nbrs")
+    }
+    assert(rowsUnder(s"$base/stream/nbrs").nonEmpty)
+    assert(rowsUnder(s"$base/stream/nbrs") === rowsUnder(s"$base/direct/nbrs"))
+    def cells(a: String) = IndexStore.readAnn(spark, s"$base/$a/idx",
+      Some(2L)).cells.collect().map(_.toString).sorted.toSeq
+    assert(cells("stream").size === 340)
+    assert(cells("stream") === cells("direct"))
   }
 
   test("streaming embedding near-dup intake: batch vectors triage against " +
@@ -595,7 +653,7 @@ class StreamingSpec extends SparkSpec {
     // standing = the batch operators' residue split, so the stream's
     // batch-1 verdicts must equal emb_dup_intake row-for-row
     val (inc, ex) = graft.ops.Similarity.embDeltaSplit(emb)
-    IndexStore.buildSig(ex, idx)
+    IndexStore.writeSig(ex, idx, Build)
 
     StreamingOps.sigIntakeBatch(inc.toDF(), 1L, idx, verdicts)
     def vRows(b: Long) = spark.read.parquet(s"$verdicts/b=$b")
@@ -617,8 +675,34 @@ class StreamingSpec extends SparkSpec {
     val v2 = vRows(2L)
     assert(v2.nonEmpty && v2.forall(_._3 == "near"),
       "an exact copy of an indexed vector must triage as near")
-    assert(IndexStore.readSigBefore(spark, idx, 3L).count() ===
+    assert(IndexStore.readSig(spark, idx, Some(3L)).count() ===
       ex.count() + 2 * inc.count())
+  }
+
+
+  test("streaming embedding near-dup intake sink: two micro-batches on a " +
+      "stream write the verdicts and signatures the direct batch calls " +
+      "write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("sig-sink").toString
+    val emb = graft.ops.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val (inc, ex) = graft.ops.Similarity.embDeltaSplit(emb)
+    Seq("stream", "direct").foreach(a =>
+      IndexStore.writeSig(ex, s"$base/$a/idx", Build))
+    val b2 = inc.withColumn("vec_id", $"vec_id" + 10000L)
+    runSink(inc, b2)(StreamingOps.sigIntakeSink(_, s"$base/stream/idx",
+      s"$base/stream/verdicts")(s"$base/ckpt"))
+    Seq(inc, b2).zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.sigIntakeBatch(b, i.toLong, s"$base/direct/idx",
+        s"$base/direct/verdicts")
+    }
+    assert(rowsUnder(s"$base/stream/verdicts").nonEmpty)
+    assert(rowsUnder(s"$base/stream/verdicts") ===
+      rowsUnder(s"$base/direct/verdicts"))
+    def sigs(a: String) = IndexStore.readSig(spark, s"$base/$a/idx", Some(2L))
+      .collect().map(_.toString).sorted.toSeq
+    assert(sigs("stream") === sigs("direct"))
   }
 
   test("streaming multimodal intake: asset batches triage against the " +
@@ -634,7 +718,7 @@ class StreamingSpec extends SparkSpec {
     // batch-1 verdicts must equal mm_dup_intake row-for-row
     val (inc, ex) = graft.ops.Multimodal.mmDeltaSplit(
       graft.ops.Multimodal.synthesizeAssets(spark, dir))
-    IndexStore.buildPhash(ex, idx)
+    IndexStore.writePhash(ex, idx, Build)
 
     StreamingOps.phashIntakeBatch(inc.toDF(), 1L, idx, verdicts)
     def vRows(b: Long) = spark.read.parquet(s"$verdicts/b=$b")
@@ -656,8 +740,34 @@ class StreamingSpec extends SparkSpec {
     val v2 = vRows(2L)
     assert(v2.nonEmpty && v2.forall(_._3 == "near"),
       "an exact copy of an indexed asset must triage as near")
-    assert(IndexStore.readPhashBefore(spark, idx, 3L).count() ===
+    assert(IndexStore.readPhash(spark, idx, Some(3L)).count() ===
       ex.count() + 2 * inc.count())
+  }
+
+
+  test("streaming multimodal intake sink: two micro-batches on a stream " +
+      "write the verdicts and signatures the direct batch calls write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("phash-sink").toString
+    val (inc, ex) = graft.ops.Multimodal.mmDeltaSplit(
+      graft.ops.Multimodal.synthesizeAssets(spark, "/root/testdata/sf0.001"))
+    Seq("stream", "direct").foreach(a =>
+      IndexStore.writePhash(ex, s"$base/$a/idx", Build))
+    val b1 = inc.toDF()
+    val b2 = inc.map(a => a.copy(asset_id = a.asset_id + 100000L)).toDF()
+    runSink(b1, b2)(StreamingOps.phashIntakeSink(_, s"$base/stream/idx",
+      s"$base/stream/verdicts")(s"$base/ckpt"))
+    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.phashIntakeBatch(b, i.toLong, s"$base/direct/idx",
+        s"$base/direct/verdicts")
+    }
+    assert(rowsUnder(s"$base/stream/verdicts").nonEmpty)
+    assert(rowsUnder(s"$base/stream/verdicts") ===
+      rowsUnder(s"$base/direct/verdicts"))
+    def sigs(a: String) = IndexStore.readPhash(spark, s"$base/$a/idx",
+      Some(2L)).collect().map(_.toString).sorted.toSeq
+    assert(sigs("stream") === sigs("direct"))
   }
 
   test("streaming audio intake: WAV batches triage against the audio " +
@@ -673,7 +783,7 @@ class StreamingSpec extends SparkSpec {
     // batch-1 verdicts must equal mm_audio_intake row-for-row
     val (inc, ex) = graft.ops.Multimodal.mmDeltaSplit(
       graft.ops.AudioDedup.synthesizeWavAssets(spark, dir))
-    IndexStore.buildAudioSig(ex, idx)
+    IndexStore.writeAudioSig(ex, idx, Build)
 
     StreamingOps.audioIntakeBatch(inc.toDF(), 1L, idx, verdicts)
     def vRows(b: Long) = spark.read.parquet(s"$verdicts/b=$b")
@@ -695,8 +805,34 @@ class StreamingSpec extends SparkSpec {
     val v2 = vRows(2L)
     assert(v2.nonEmpty && v2.forall(_._3 == "near"),
       "an exact copy of an indexed WAV must triage as near")
-    assert(IndexStore.readAudioSigBefore(spark, idx, 3L).count() ===
+    assert(IndexStore.readAudioSig(spark, idx, Some(3L)).count() ===
       ex.count() + 2 * inc.count())
+  }
+
+
+  test("streaming audio intake sink: two micro-batches on a stream " +
+      "write the verdicts and signatures the direct batch calls write") {
+    import spark.implicits._
+    import graft.sources.IndexStore
+    val base = java.nio.file.Files.createTempDirectory("audio-sink").toString
+    val (inc, ex) = graft.ops.Multimodal.mmDeltaSplit(
+      graft.ops.AudioDedup.synthesizeWavAssets(spark, "/root/testdata/sf0.001"))
+    Seq("stream", "direct").foreach(a =>
+      IndexStore.writeAudioSig(ex, s"$base/$a/idx", Build))
+    val b1 = inc.toDF()
+    val b2 = inc.map(a => a.copy(asset_id = a.asset_id + 100000L)).toDF()
+    runSink(b1, b2)(StreamingOps.audioIntakeSink(_, s"$base/stream/idx",
+      s"$base/stream/verdicts")(s"$base/ckpt"))
+    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.audioIntakeBatch(b, i.toLong, s"$base/direct/idx",
+        s"$base/direct/verdicts")
+    }
+    assert(rowsUnder(s"$base/stream/verdicts").nonEmpty)
+    assert(rowsUnder(s"$base/stream/verdicts") ===
+      rowsUnder(s"$base/direct/verdicts"))
+    def sigs(a: String) = IndexStore.readAudioSig(spark, s"$base/$a/idx",
+      Some(2L)).collect().map(_.toString).sorted.toSeq
+    assert(sigs("stream") === sigs("direct"))
   }
 
   test("streaming triage sink: exact AND near duplicates of earlier batches " +
@@ -709,7 +845,7 @@ class StreamingSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("triage").toString
     val idx = s"$base/idx"
     val verdicts = s"$base/verdicts"
-    IndexStore.buildDedup(standing, idx)
+    IndexStore.writeDedup(standing, idx, Build)
 
     // a long novel doc, its exact copy, and a near variant (small edit)
     val novel = (1 to 40).map(i => s"tok$i").mkString(" ")
@@ -1186,7 +1322,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(b2: _*)
       q.processAllAvailable()
 
-      val versions = ViewMaintain.viewVersions(spark, root)
+      val versions = Tables.versions(spark, root, "v")
       assert(versions.size == 2, s"versions $versions")
       // prefix property: each committed version is the aggregate of
       // exactly the batches up to it
@@ -1196,7 +1332,7 @@ class StreamingSpec extends SparkSpec {
       // it deterministically rewrites the same view
       ViewMaintain.applyViewBatch(b2.toDF(), root, versions.last)
       assert(viewAt(versions.last) == aggOf(b1 ++ b2))
-      assert(ViewMaintain.viewVersions(spark, root) == versions)
+      assert(Tables.versions(spark, root, "v") == versions)
     } finally q.stop()
   }
 }
