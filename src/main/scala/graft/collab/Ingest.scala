@@ -45,9 +45,9 @@ object Ingest {
       col(Schemas.UserCol), col(Schemas.ProductCol), col(Schemas.RatingCol))
 
   /** Full ETL: CSV → store.{ratings, validation}
-    * (≙ populateTables, Driver.java:86-92). Returns (train, validation)
-    * analytic frames for immediate reuse without a store round-trip. */
-  def populate(spark: SparkSession, store: TableStore, csvPath: String): (DataFrame, DataFrame) = {
+    * (≙ populateTables, Driver.java:86-92). The parsed CSV is cached for
+    * the two appends and released once both have run. */
+  def populate(spark: SparkSession, store: TableStore, csvPath: String): Unit = {
     val parsed = parseCsv(spark, csvPath).cache()
     val train = selectSet(parsed, Schemas.TrainTag)
     val valid = selectSet(parsed, Schemas.ValidationTag)
@@ -55,6 +55,6 @@ object Ingest {
     store.create(Schemas.ValidationTable, Schemas.storedRatingSchema)
     store.append(Schemas.RatingsTable, withRowId(train))
     store.append(Schemas.ValidationTable, withRowId(valid))
-    (train, valid)
+    parsed.unpersist()
   }
 }

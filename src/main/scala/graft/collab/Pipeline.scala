@@ -6,10 +6,12 @@ import org.apache.spark.sql.SparkSession
   * trainAndValidate, Driver.java:33-69): truncate → populate from CSV →
   * train → predict → validate → report.
   *
-  * Single-pass dataflow: the CSV is read once, the validation set is read
-  * once and cached, and the validation ⋈ prediction join is computed once
-  * and reused for both RMSE and the report — the reference scans the
-  * validation table three times and joins twice (SURVEY §4).
+  * Single-pass dataflow: the CSV is read once and cached for both store
+  * appends, then released; the validation set is read once and cached,
+  * and the validation ⋈ prediction join is computed once and reused for
+  * both RMSE and the report — the reference scans the validation table
+  * three times and joins twice (SURVEY §4). Both caches are released
+  * before the round returns.
   */
 object Pipeline {
   final case class Result(rmse: Double, report: String)

@@ -41,10 +41,14 @@ class SourceScanSpec extends AnyFunSuite {
 
   test("src/main keys state on sessions, temp paths or application ids " +
       "only in the State registry") {
+    // entry points choosing a default output directory may make a temp dir
+    def entryPoint(site: String) =
+      (site.startsWith("graft/tools/") || site.startsWith("graft/collab/Cli.scala: ")) &&
+        site.endsWith(": createTempDirectory")
     val sites = sources.flatMap { case (p, src) =>
-      Seq("WeakHashMap", "java.io.tmpdir", "applicationId")
+      Seq("WeakHashMap", "java.io.tmpdir", "applicationId", "createTempDirectory")
         .filter(src.contains).map(w => s"${main.relativize(p)}: $w")
-    }
+    }.filterNot(entryPoint)
     assert(sites.forall(_.startsWith("graft/State.scala: ")), sites)
     assert(sites.nonEmpty, "the registry itself must be found")
   }

@@ -27,20 +27,36 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("e2e: populate -> train -> predict -> validate -> report, RMSE in [0, 0.5)") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val result = Pipeline.run(spark, new ParquetTableStore(spark, warehouse), csv)
+    // a fresh copy of the CSV, as a refit reads a new batch, so no earlier
+    // test's cache of the same plan is reused
+    val dir = java.nio.file.Files.createTempDirectory("graft-wh")
+    try {
+      val batch = dir.resolve("ratings.csv")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(csv), batch)
+      val warehouse = s"$dir/wh"
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val result = Pipeline.run(spark, new ParquetTableStore(spark, warehouse), batch.toString)
 
-    assert(result.rmse >= 0.0, "RMSE must be non-negative")
-    assert(result.rmse < 0.5, s"Excess root mean square error: ${result.rmse}")
+      assert(result.rmse >= 0.0, "RMSE must be non-negative")
+      assert(result.rmse < 0.5, s"Excess root mean square error: ${result.rmse}")
 
-    val lines = result.report.split("\n")
-    assert(lines.head === Report.Header)
-    assert(lines.length === 11, "9 validation rows + header + RMSE footer")
-    assert(lines.last.startsWith("RMSE = "))
+      val lines = result.report.split("\n")
+      assert(lines.head === Report.Header)
+      assert(lines.length === 11, "9 validation rows + header + RMSE footer")
+      assert(lines.last.startsWith("RMSE = "))
 
-    // store round-trip happened: both tables populated
-    val store = new ParquetTableStore(spark, warehouse)
-    assert(store.scan(Schemas.RatingsTable).count() === 111)
-    assert(store.scan(Schemas.ValidationTable).count() === 9)
+      // the round released its cached CSV parse
+      val csvCaches = sc.getPersistentRDDs.collect {
+        case (id, rdd) if !before(id) && Option(rdd.name).exists(_.contains("FileScan text")) =>
+          s"$id: ${rdd.name}"
+      }
+      assert(csvCaches.isEmpty, csvCaches)
+
+      // store round-trip happened: both tables populated
+      val store = new ParquetTableStore(spark, warehouse)
+      assert(store.scan(Schemas.RatingsTable).count() === 111)
+      assert(store.scan(Schemas.ValidationTable).count() === 9)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }
