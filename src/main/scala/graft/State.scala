@@ -53,9 +53,8 @@ object State {
   private final class Pinned(s: SparkSession, mk: => AnyRef) {
     @volatile var ids: Set[Int] = Set.empty
     val once = new Once({
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      val v = mk
-      ids = (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
+      val (v, made) = persistedBy(s)(mk)
+      ids = made
       v
     })
   }
@@ -83,6 +82,20 @@ object State {
     session(s).pinned.computeIfAbsent(key, _ => new Pinned(s, mk))
       .once.value.asInstanceOf[T]
 
+  /** `body`'s value and the ids of the RDDs it left persisted. */
+  def persistedBy[A](s: SparkSession)(body: => A): (A, Set[Int]) = {
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val v = body
+    (v, (sc.getPersistentRDDs.keySet -- before).toSet)
+  }
+
+  /** Unpersist those of `ids` that are still persisted. */
+  def unpersist(s: SparkSession, ids: Iterable[Int]): Unit = {
+    val persisted = s.sparkContext.getPersistentRDDs
+    ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
+  }
+
   /** Register eagerly checkpointed RDD ids that [[releaseStrays]] may
     * drop. */
   def releasable(s: SparkSession, ids: Iterable[Int]): Unit = {
@@ -102,15 +115,9 @@ object State {
   def releaseStrays(s: SparkSession): Unit = {
     val scope = session(s)
     val keep = scope.pinned.values.asScala.flatMap(_.ids).toSet
-    val persisted = s.sparkContext.getPersistentRDDs
-    val it = scope.releasable.iterator()
-    while (it.hasNext) {
-      val id = it.next()
-      if (!keep(id)) {
-        persisted.get(id).foreach(_.unpersist(blocking = false))
-        it.remove()
-      }
-    }
+    val drop = scope.releasable.asScala.filterNot(keep).toList
+    unpersist(s, drop)
+    drop.foreach(id => scope.releasable.remove(id))
   }
 
   /** A write at `root` made stale whatever was read from it: in every
@@ -127,12 +134,10 @@ object State {
         case (o, scope) if o.sparkContext eq sc => scope
       }.toList
     }
-    val persisted = sc.getPersistentRDDs
     for (scope <- scopes) {
       scope.schemas.keySet.removeIf(p => hit(p))
       for (k <- scope.pinned.keySet.asScala.toList if hit(k))
-        Option(scope.pinned.remove(k)).foreach(_.ids.foreach(id =>
-          persisted.get(id).foreach(_.unpersist(blocking = false))))
+        Option(scope.pinned.remove(k)).foreach(p => unpersist(s, p.ids))
     }
   }
 

@@ -5,14 +5,18 @@ package graft.collab
   * args[0] before its length guard; we validate first and keep a single
   * impl — the version argument is accepted and ignored for parity
   * (SURVEY §2.10 L2, §1.3).
+  *
+  * Usage: `Cli [csvPath] [warehouse] [modelDir]`. Without a warehouse the
+  * store lives under the application's [[graft.State]] directory and is
+  * deleted when the application ends.
   */
 object Cli {
   def main(args: Array[String]): Unit = {
     val csvPath = args.headOption.getOrElse("src/test/resources/ratings.csv")
-    val warehouse = if (args.length > 1) args(1)
-      else java.nio.file.Files.createTempDirectory("graft-store").toString
     val spark = graft.Session()
     try {
+      val warehouse = if (args.length > 1) args(1)
+        else graft.State.built(spark, "store", csvPath)(_ => ())
       val modelDir = if (args.length > 2) Some(args(2)) else None
       val result = Pipeline.run(spark, new ParquetTableStore(spark, warehouse),
         csvPath, modelDir = modelDir)

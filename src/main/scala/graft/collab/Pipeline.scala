@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * and the validation ⋈ prediction join is computed once and reused for
   * both RMSE and the report — the reference scans the validation table
   * three times and joins twice (SURVEY §4). Both caches are released
-  * before the round returns.
+  * before the round returns, and so are the model's factor RDDs: the
+  * model is used only inside [[Training.train]]'s block, which
+  * unpersists them when the block returns.
   */
 object Pipeline {
   final case class Result(rmse: Double, report: String)
@@ -32,14 +34,15 @@ object Pipeline {
       .select(Schemas.UserCol, Schemas.ProductCol, Schemas.RatingCol)
       .cache()
 
-    val model = Training.train(train, seed = seed)
-    modelDir.foreach(Training.save(model, _))
-    val predictions = Scoring.predict(model,
-      valid.select(Schemas.UserCol, Schemas.ProductCol))
-    val joined = Validation.joined(valid, predictions).cache()
-    val rmse = Validation.rmse(joined)
-    val report = Report.resultsReport(joined, rmse)
-    joined.unpersist(); valid.unpersist()
-    Result(rmse, report)
+    Training.train(train, seed = seed) { model =>
+      modelDir.foreach(Training.save(model, _))
+      val predictions = Scoring.predict(model,
+        valid.select(Schemas.UserCol, Schemas.ProductCol))
+      val joined = Validation.joined(valid, predictions).cache()
+      val rmse = Validation.rmse(joined)
+      val report = Report.resultsReport(joined, rmse)
+      joined.unpersist(); valid.unpersist()
+      Result(rmse, report)
+    }
   }
 }

@@ -44,12 +44,19 @@ object Training {
 
   def load(path: String): ALSModel = ALSModel.load(path)
 
-  def train(
+  /** Fit ALS on `ratings` and run `use` on the model. When `use` returns,
+    * every RDD the fit left persisted — the `userFactors` and
+    * `itemFactors` RDDs and the iteration-checkpoint copy `itemFactors-10`
+    * — is unpersisted, so a round leaves no blocks behind. The model is
+    * therefore valid only inside `use`: scored after it, its factors would
+    * recompute through the fit's whole lineage. A model needed beyond
+    * `use` is saved there and reloaded with [[load]]. */
+  def train[A](
       ratings: DataFrame,
       rank: Int = DefaultRank,
       maxIter: Int = DefaultMaxIter,
       regParam: Double = DefaultRegParam,
-      seed: Long = DefaultSeed): ALSModel = {
+      seed: Long = DefaultSeed)(use: ALSModel => A): A = {
     // ALS's checkpointInterval (default 10) only takes effect when a
     // checkpoint dir exists; without it the 2×maxIter-stage lineage can
     // overflow the stack at task-serialization time (observed at iter=20
@@ -60,7 +67,7 @@ object Training {
     val sc = s.sparkContext
     if (sc.getCheckpointDir.isEmpty)
       sc.setCheckpointDir(State.built(s, "ckpt", "als")(_ => ()))
-    new ALS()
+    val als = new ALS()
       .setUserCol(Schemas.UserCol)
       .setItemCol(Schemas.ProductCol)
       .setRatingCol(Schemas.RatingCol)
@@ -74,6 +81,7 @@ object Training {
       // Unseen (user, product) pairs drop from predictions, matching the
       // mllib predict() behavior of silently omitting them (SURVEY §2.9 M2).
       .setColdStartStrategy("drop")
-      .fit(ratings)
+    val (model, ids) = State.persistedBy(s)(als.fit(ratings))
+    try use(model) finally State.unpersist(s, ids)
   }
 }

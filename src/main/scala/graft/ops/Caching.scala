@@ -32,9 +32,8 @@ object Caching {
     * own localCheckpoint) instead of merely un-caching it (r15 ADVICE). */
   def materializeAndRelease(out: DataFrame, caches: DataFrame*): DataFrame = {
     val s = out.sparkSession
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val r = out.localCheckpoint()
-    State.releasable(s, s.sparkContext.getPersistentRDDs.keySet -- before)
+    val (r, ids) = State.persistedBy(s)(out.localCheckpoint())
+    State.releasable(s, ids)
     caches.foreach(_.unpersist())
     r
   }
@@ -57,9 +56,7 @@ object Caching {
     * comparison errs toward not broadcasting. */
   private def pinSized(f: DataFrame): DataFrame = {
     val s = f.sparkSession
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val cp = f.localCheckpoint()
-    val newIds = s.sparkContext.getPersistentRDDs.keySet -- before
+    val (cp, newIds) = State.persistedBy(s)(f.localCheckpoint())
     val bytes = s.sparkContext.getRDDStorageInfo
       .filter(i => newIds.contains(i.id)).map(i => i.memSize + i.diskSize).sum
     // the session's already-parsed threshold; negative disables broadcast

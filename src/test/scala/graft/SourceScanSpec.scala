@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 
 /** Source-level rules for `src/main`: every entry point gets its session
   * from [[Session]], the only env knobs are the declared contract,
-  * session- or application-keyed state lives only in [[State]], and the
-  * standing indexes and streaming sinks express their variants as
-  * parameters, not as copies. */
+  * session- or application-keyed state and persisted-RDD snapshots live
+  * only in [[State]], and the standing indexes and streaming sinks
+  * express their variants as parameters, not as copies. */
 class SourceScanSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -41,16 +41,23 @@ class SourceScanSpec extends AnyFunSuite {
 
   test("src/main keys state on sessions, temp paths or application ids " +
       "only in the State registry") {
-    // entry points choosing a default output directory may make a temp dir
+    // demo tools choosing a default output directory may make a temp dir
     def entryPoint(site: String) =
-      (site.startsWith("graft/tools/") || site.startsWith("graft/collab/Cli.scala: ")) &&
-        site.endsWith(": createTempDirectory")
+      site.startsWith("graft/tools/") && site.endsWith(": createTempDirectory")
     val sites = sources.flatMap { case (p, src) =>
       Seq("WeakHashMap", "java.io.tmpdir", "applicationId", "createTempDirectory")
         .filter(src.contains).map(w => s"${main.relativize(p)}: $w")
     }.filterNot(entryPoint)
     assert(sites.forall(_.startsWith("graft/State.scala: ")), sites)
     assert(sites.nonEmpty, "the registry itself must be found")
+  }
+
+  test("src/main snapshots persisted RDDs only in the State registry") {
+    val sites = sources.collect {
+      case (p, src) if src.contains("getPersistentRDDs") =>
+        main.relativize(p).toString
+    }
+    assert(sites === Seq("graft/State.scala"))
   }
 
   test("src/main starts a foreachBatch stream at exactly one site, in " +

@@ -15,15 +15,14 @@ class PipelineSpec extends SparkSpec {
     val valid = Ingest.selectSet(parsed, Schemas.ValidationTag)
       .select(Schemas.UserCol, Schemas.ProductCol)
 
-    val model = Training.train(train, maxIter = 5)
-    val dir = java.nio.file.Files.createTempDirectory("als-model").toString
-    Training.save(model, dir)
-    val reloaded = Training.load(dir)
-
     def preds(m: org.apache.spark.ml.recommendation.ALSModel) =
       Scoring.predict(m, valid).orderBy(Schemas.UserCol, Schemas.ProductCol)
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-    assert(preds(model).toSeq === preds(reloaded).toSeq)
+    val dir = java.nio.file.Files.createTempDirectory("als-model")
+    try Training.train(train, maxIter = 5) { model =>
+      Training.save(model, dir.toString)
+      assert(preds(model).toSeq === preds(Training.load(dir.toString)).toSeq)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("e2e: populate -> train -> predict -> validate -> report, RMSE in [0, 0.5)") {
@@ -46,12 +45,12 @@ class PipelineSpec extends SparkSpec {
       assert(lines.length === 11, "9 validation rows + header + RMSE footer")
       assert(lines.last.startsWith("RMSE = "))
 
-      // the round released its cached CSV parse
-      val csvCaches = sc.getPersistentRDDs.collect {
-        case (id, rdd) if !before(id) && Option(rdd.name).exists(_.contains("FileScan text")) =>
-          s"$id: ${rdd.name}"
+      // the round released everything it persisted: the cached CSV parse,
+      // the validation caches and the model's factor RDDs
+      val left = sc.getPersistentRDDs.collect {
+        case (id, rdd) if !before(id) => s"$id: ${rdd.name}"
       }
-      assert(csvCaches.isEmpty, csvCaches)
+      assert(left.isEmpty, left)
 
       // store round-trip happened: both tables populated
       val store = new ParquetTableStore(spark, warehouse)

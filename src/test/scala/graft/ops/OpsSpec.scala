@@ -1163,14 +1163,15 @@ class CollabEventsSpec extends SparkSpec {
       .select("user", "product", "rating")
     val valid = ratings.filter(pmod(col("event_id"), lit(10)) >= 8)
       .select("user", "product").distinct()
-    val model = Training.train(train, maxIter = 2)
-    val path = java.nio.file.Files.createTempDirectory("als-save").toString
-    Training.save(model, path)
     def scoreMap(m: org.apache.spark.ml.recommendation.ALSModel) =
       Scoring.predict(m, valid).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    assert(scoreMap(Training.load(path)) === scoreMap(model),
-      "parquet factor round-trip must be exact")
+    val path = java.nio.file.Files.createTempDirectory("als-save")
+    try Training.train(train, maxIter = 2) { model =>
+      Training.save(model, path.toString)
+      assert(scoreMap(Training.load(path.toString)) === scoreMap(model),
+        "parquet factor round-trip must be exact")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(path.toFile)
     ratings.unpersist()
 
     // the harness query runs end to end off the standing saved model
@@ -1207,17 +1208,74 @@ class CollabEventsSpec extends SparkSpec {
       "and score (the raw int cast overflowed at the x10 scale replica)") {
     // same shape ScaleUp produces: a copy of the events table with user
     // ids offset past 2^31
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("als-wide").toString
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    ev.withColumn("user_id", col("user_id") + lit(6000000000L))
-      .write.parquet(s"$base/events.parquet")
-    val row = CollabEvents.alsRmse(spark, base, maxIter = 2).head()
-    assert(!row.getDouble(0).isNaN && row.getDouble(0) >= 0.0)
-    assert(row.getLong(3) > 0, "wide-id pairs scored")
-    // outputs carry the ORIGINAL 64-bit ids, not the dense fit ids
-    val users = CollabEvents.ratingsFromEvents(spark, base)
-      .select(max(col("user_id"))).head().getLong(0)
-    assert(users > Int.MaxValue.toLong)
+    val tmp = java.nio.file.Files.createTempDirectory("als-wide")
+    val base = tmp.toString
+    try {
+      val ev = Tables.events(spark, "/root/testdata/sf0.001")
+      ev.withColumn("user_id", col("user_id") + lit(6000000000L))
+        .write.parquet(s"$base/events.parquet")
+      val row = CollabEvents.alsRmse(spark, base).head()
+      assert(!row.getDouble(0).isNaN && row.getDouble(0) >= 0.0)
+      assert(row.getLong(3) > 0, "wide-id pairs scored")
+      // outputs carry the ORIGINAL 64-bit ids, not the dense fit ids
+      val users = CollabEvents.ratingsFromEvents(spark, base)
+        .select(max(col("user_id"))).head().getLong(0)
+      assert(users > Int.MaxValue.toLong)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  /** Stages named at an `ALS.scala` call site while `body` runs. Listener
+    * events arrive asynchronously but in order, so a marker job started
+    * after `body` fences every stage `body` submitted. */
+  private def alsStages(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.name.contains("ALS.scala")) names.add(e.stageInfo.name)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "als-fence"))
+          fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("als-fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    names.toArray(Array.empty[String]).toSeq
+  }
+
+  test("the collab family fits ALS once per corpus: entry, rmse, recommend " +
+      "and score-from-saved together run one fit's ALS stages") {
+    import graft.collab.Training
+    // a fresh copy, so no earlier test's standing model is reused
+    val tmp = java.nio.file.Files.createTempDirectory("als-once")
+    val base = tmp.toString
+    try {
+      Tables.events(spark, "/root/testdata/sf0.001")
+        .write.parquet(s"$base/events.parquet")
+      val family = alsStages {
+        CollabEvents.entryFrame(spark, base).collect()
+        CollabEvents.alsRmse(spark, base).collect()
+        CollabEvents.alsRecommend(spark, base).collect()
+        CollabEvents.alsScoreFromSaved(spark, base).collect()
+      }
+      // one fit by hand: the standing model's fit and save, and the one
+      // reload (alsRecommend reads the saved model through ALSModel.load)
+      val train = CollabEvents.ratingsFromEvents(spark, base)
+        .filter(pmod(col("event_id"), lit(10)) < 8)
+        .select("user", "product", "rating")
+      val oneFit = alsStages {
+        Training.train(train, maxIter = 10)(Training.save(_, s"$base/model"))
+        Training.load(s"$base/model")
+      }
+      assert(oneFit.count(_.startsWith("count at ")) > 0, oneFit)
+      assert(family === oneFit)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }
