@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 /** CSV ingestion: read the ratings CSV once, split into train ("I,") and
-  * validation ("V,") sets, attach a uuid row id, and land both in the store
-  * (ref: CollabFilterCassandraDriver.java:86-134, RatingDO.java:14-15,29-31).
+  * validation ("V,") sets, attach a random UUID row id, and land both in
+  * the store (ref: CollabFilterCassandraDriver.java:86-134, RatingDO.java:14-15,29-31).
   *
   * Deltas from the reference, by design (SURVEY §4):
   *   - The reference reads the CSV twice (once per prefix). We read once and
@@ -38,10 +38,21 @@ object Ingest {
     parsed.filter(col("set") === tag)
       .select(Schemas.UserCol, Schemas.ProductCol, Schemas.RatingCol)
 
-  /** Attach the store-layer row id (≙ UUIDs.timeBased(), RatingDO.java:30).
-    * Identity only — never read by any query (SURVEY §1.3). */
+  /** A random UUID string per row. A Scala UDF, not the `uuid()`
+    * expression: `uuid()` compiles its random seed into the generated
+    * Java as a literal, so every plan using it is new to Spark's codegen
+    * cache and Janino compiles it again, every round. The UDF's generated
+    * code only references the function object, so it is the same every
+    * round and compiles once. Marked nondeterministic so the optimizer
+    * never folds, duplicates or reorders it. */
+  private val randomUuid =
+    udf(() => java.util.UUID.randomUUID().toString).asNondeterministic()
+
+  /** Attach the store-layer row id (≙ UUIDs.timeBased(), RatingDO.java:30):
+    * a unique random UUID string. Identity only — never read by any query
+    * (SURVEY §1.3). */
   def withRowId(df: DataFrame): DataFrame =
-    df.select(expr("uuid()").as(Schemas.IdCol),
+    df.select(randomUuid().as(Schemas.IdCol),
       col(Schemas.UserCol), col(Schemas.ProductCol), col(Schemas.RatingCol))
 
   /** Full ETL: CSV → store.{ratings, validation}

@@ -7,22 +7,23 @@ import org.apache.spark.sql.SparkSession
   * train → predict → validate → report.
   *
   * Single-pass dataflow: the CSV is read once and cached for both store
-  * appends, then released; the validation set is read once and cached,
-  * and the validation ⋈ prediction join is computed once and reused for
-  * both RMSE and the report — the reference scans the validation table
-  * three times and joins twice (SURVEY §4). Both caches are released
-  * before the round returns, and so are the model's factor RDDs: the
-  * model is used only inside [[Training.train]]'s block, which
-  * unpersists them when the block returns.
+  * appends, then released. After the fit, the validation rows are scored,
+  * and the RMSE and the report derived, from one plan and one collect:
+  * the validation table is scanned once and matched to the predictions
+  * once, where the reference scans it three times and joins twice
+  * (SURVEY §4). Nothing else is cached. The model is used only inside
+  * [[Training.train]]'s block, which unpersists its factor RDDs when the
+  * block returns, so a round leaves nothing persisted.
+  *
+  * Each validation row is scored once, so duplicate (user, product)
+  * validation rows give one report line each ([[Scoring]]).
   */
 object Pipeline {
-  final case class Result(rmse: Double, report: String)
-
   /** @param modelDir when set, the trained ALSModel is persisted there
     *                  (train once, score many — see Training.save) */
   def run(spark: SparkSession, store: TableStore, csvPath: String,
       seed: Long = Training.DefaultSeed,
-      modelDir: Option[String] = None): Result = {
+      modelDir: Option[String] = None): Report.Result = {
     // ETL: CSV → store (≙ truncate + populateTables)
     Ingest.populate(spark, store, csvPath)
 
@@ -32,17 +33,10 @@ object Pipeline {
       .select(Schemas.UserCol, Schemas.ProductCol, Schemas.RatingCol)
     val valid = store.scan(Schemas.ValidationTable)
       .select(Schemas.UserCol, Schemas.ProductCol, Schemas.RatingCol)
-      .cache()
 
     Training.train(train, seed = seed) { model =>
       modelDir.foreach(Training.save(model, _))
-      val predictions = Scoring.predict(model,
-        valid.select(Schemas.UserCol, Schemas.ProductCol))
-      val joined = Validation.joined(valid, predictions).cache()
-      val rmse = Validation.rmse(joined)
-      val report = Report.resultsReport(joined, rmse)
-      joined.unpersist(); valid.unpersist()
-      Result(rmse, report)
+      Report.of(Scoring.scored(model, valid), csvPath)
     }
   }
 }

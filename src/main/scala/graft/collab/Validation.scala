@@ -4,18 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The relational core of the reference: equi inner join of validations and
-  * predictions on (user, product), per-row squared error, global mean, √
-  * (ref: CollabFilterCassandra8.java:45-57).
-  *
-  * The reference computes this join twice — once distributed for RMSE, once
-  * driver-side as a collect + hash map for the report
-  * (CollabFilterCassandra8.java:48 vs :63-69). We compute it once; callers
-  * cache `joined` and derive both RMSE and the report from it (SURVEY §4).
+  * predictions on (user, product) (ref: CollabFilterCassandra8.java:45-57).
+  * `CollabEvents.entryFrame` builds its actual + predicted frame with it.
+  * A collab round does not: its scorer joins the validation rows to the
+  * model's factors directly, and its RMSE and report come from one pass
+  * over that match ([[Scoring.scored]], [[Report.of]]).
   *
   * Scale notes: the join shuffles on (user, product) and Catalyst
-  * auto-broadcasts the smaller side below the broadcast threshold; the
-  * aggregate is a partial/final Average — one row crosses the network per
-  * partition. No collect of row data.
+  * auto-broadcasts the smaller side below the broadcast threshold.
   */
 object Validation {
   import Schemas._
@@ -27,15 +23,4 @@ object Validation {
       predictions.select(col(UserCol), col(ProductCol),
         col(PredictionCol)),
       Seq(UserCol, ProductCol), "inner")
-
-  /** RMSE over the joined frame: sqrt(avg((actual − predicted)²))
-    * (≙ P6 + A1 + A2). One job, one scalar to the driver. */
-  def rmse(joined: DataFrame): Double =
-    joined.agg(
-      sqrt(avg(pow(col(RatingCol) - col(PredictionCol), lit(2)))).as("rmse"))
-      .head().getDouble(0)
-
-  /** One-call composition matching the reference's validate() signature. */
-  def validate(predictions: DataFrame, validations: DataFrame): Double =
-    rmse(joined(validations, predictions))
 }

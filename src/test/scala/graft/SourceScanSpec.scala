@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Source-level rules for `src/main`: every entry point gets its session
   * from [[Session]], the only env knobs are the declared contract,
   * session- or application-keyed state and persisted-RDD snapshots live
-  * only in [[State]], and the standing indexes and streaming sinks
-  * express their variants as parameters, not as copies. */
+  * only in [[State]], the standing indexes and streaming sinks express
+  * their variants as parameters, not as copies, and no expression
+  * compiles a per-run seed into generated code. */
 class SourceScanSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
 
@@ -58,6 +59,24 @@ class SourceScanSpec extends AnyFunSuite {
         main.relativize(p).toString
     }
     assert(sites === Seq("graft/State.scala"))
+  }
+
+  test("src/main builds no uuid() expression: its random seed is compiled " +
+      "into the generated code, so every plan using it misses the codegen " +
+      "cache") {
+    val sites = sources.flatMap { case (p, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (line, i) if !comment(line) &&
+            """(?i)\buuid\s*\(\s*\)""".r.findFirstIn(line).isDefined =>
+          s"${main.relativize(p)}:${i + 1}"
+      }
+    }
+    assert(sites === Nil)
+  }
+
+  private def comment(line: String) = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
   }
 
   test("src/main starts a foreachBatch stream at exactly one site, in " +

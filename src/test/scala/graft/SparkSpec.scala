@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,12 +26,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  /** Run `body` with `listener` attached, and return once the listener has
+    * seen every event `body` caused. Listener events arrive asynchronously
+    * but in order, so a marker job started after `body` fences them; the
+    * listener sees that job too, tagged [[SparkSpec.isFence]]. */
+  def fenced[A](listener: SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val fence = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (SparkSpec.isFence(e)) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(fence)
+    try {
+      val out = body
+      sc.setJobDescription(SparkSpec.Fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally {
+      sc.removeSparkListener(fence)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Every row of the parquet output under `path`, as sorted strings. */
   def rowsUnder(path: String): Seq[String] =
     spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
 }
 
 object SparkSpec {
+  private val Fence = "listener-fence"
+  def isFence(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(
+      _.getProperty("spark.job.description") == Fence)
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

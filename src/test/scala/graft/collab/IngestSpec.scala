@@ -46,6 +46,24 @@ class IngestSpec extends SparkSpec {
     assert(withId.columns.toSeq === Seq("id", "user", "product", "rating"))
     assert(withId.select("id").distinct().count() === 111)
   }
+
+  test("a second populate, of a new batch into a fresh store, compiles no " +
+      "new code: the row-id expression is codegen-stable") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest")
+    try {
+      def round(n: Int): Unit = {
+        val batch = dir.resolve(s"ratings-$n.csv")
+        java.nio.file.Files.copy(java.nio.file.Paths.get(csv), batch)
+        Ingest.populate(spark, new ParquetTableStore(spark, s"$dir/wh-$n"),
+          batch.toString)
+      }
+      round(1)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      round(2)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }
 
 class TableStoreSpec extends SparkSpec {

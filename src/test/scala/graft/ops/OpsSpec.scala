@@ -1164,7 +1164,7 @@ class CollabEventsSpec extends SparkSpec {
     val valid = ratings.filter(pmod(col("event_id"), lit(10)) >= 8)
       .select("user", "product").distinct()
     def scoreMap(m: org.apache.spark.ml.recommendation.ALSModel) =
-      Scoring.predict(m, valid).collect()
+      Scoring.scored(m, valid).collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val path = java.nio.file.Files.createTempDirectory("als-save")
     try Training.train(train, maxIter = 2) { model =>
@@ -1224,29 +1224,14 @@ class CollabEventsSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
-  /** Stages named at an `ALS.scala` call site while `body` runs. Listener
-    * events arrive asynchronously but in order, so a marker job started
-    * after `body` fences every stage `body` submitted. */
+  /** Stages named at an `ALS.scala` call site while `body` runs. */
   private def alsStages(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
     val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
+    fenced(new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (e.stageInfo.name.contains("ALS.scala")) names.add(e.stageInfo.name)
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == "als-fence"))
-          fenced.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("als-fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
+    })(body)
     names.toArray(Array.empty[String]).toSeq
   }
 

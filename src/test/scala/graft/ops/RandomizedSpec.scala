@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.collab.Validation
+import graft.collab.{Report, Validation}
 import scala.util.Random
 
 /** Seeded randomized tests pitting distributed operators against naive
@@ -71,7 +71,7 @@ class RandomizedSpec extends SparkSpec {
       val preds = pairs.map(p => (p._1, p._2, p._4)).toDF("user", "product", "prediction")
       val naive = math.sqrt(
         pairs.map(p => math.pow(p._3 - p._4, 2)).sum / pairs.length)
-      val got = Validation.validate(preds, valid)
+      val got = Report.of(Validation.joined(valid, preds), s"seed=$seed").rmse
       assert(math.abs(got - naive) < 1e-9, s"seed=$seed: $got vs $naive")
     }
   }
